@@ -3140,7 +3140,7 @@ def _bloom_params(capacity: int = 2048, error_rate: float = 0.01,
 def q_j1_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/J2 hash-oracled (r5): the per-partition Bloom tracker ITSELF —
     mark the even-doc_id URLs into the 32-bucket bitmaps (J2 insert path,
-    snapshot-committed), probe ALL 500 URLs (J1 cogroup+numpy probe),
+    snapshot-committed), probe ALL 500 URLs (J1 broadcast-join probe),
     and return every key's membership verdict INCLUDING the deterministic
     false positives. The oracle replays the identical double-hash bit
     arithmetic in SQL — h1/h2 from md5 hex, bucket = h1 % 32, position_i

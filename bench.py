@@ -748,10 +748,10 @@ def _main_legs(result: dict) -> None:
             _log(f"skip skew (est {est:.0f}s > left {_left():.0f}s)")
             result["skipped"].append("skew")
 
-    # hot-path variants: Bloom-probe dedup (the cogroup/applyInPandas numpy
-    # path) and the fixed-cap exact pop (headline until r4; the budgeted
-    # production path took over the headline) — opt-IN (r2: these legs blew
-    # the driver budget as defaults), each budget-checked
+    # hot-path variants: Bloom-probe dedup (broadcast bitmap join, bit tests
+    # as Column expressions) and the fixed-cap exact pop (headline until r4;
+    # the budgeted production path took over the headline) — opt-IN (r2:
+    # these legs blew the driver budget as defaults), each budget-checked
     if os.environ.get("BENCH_VARIANTS") == "1":
         result["variants"] = {}
         for variant in ("bloom", "exact"):

@@ -25,9 +25,14 @@ Reference: /root/reference/lib/polipus/robotex.rb. Replicated quirks (do NOT
 Spark shape: robots docs are parsed once per wave-0 with a mapInPandas over
 the (small) set of ``*/robots.txt`` corpus rows into a ``robots_rules``
 DataFrame (host, agent_re, rule, path_re, delay, section_order). The F2 gate
-is a broadcast join of candidates × disallow rules on host; per-row dynamic
-regex matching runs in one Arrow-vectorized pandas UDF (patterns are
-row-dependent, which Catalyst's rlike cannot codegen).
+is one broadcast ``left_anti`` join of the candidates against this user
+agent's disallow rules on ``host = _r_host AND regexp_like(path, path_re)``:
+``regexp_like`` takes a row-dependent pattern column, so the match runs in
+the JVM and the candidates are read once. The rule regexes are Python
+``re.escape`` output, which means the same in Java's regex syntax: every
+escape it emits is a backslash before a non-letter (a literal in both), and
+the only operators left are ``^`` and ``.*`` (``tests/test_robots.py`` pins
+the gate against ``allowed_scalar`` on every escaped character).
 """
 
 from __future__ import annotations
@@ -38,7 +43,6 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 RULES_SCHEMA = (
     "host string, agent_re string, rule string, path_re string, "
@@ -175,71 +179,34 @@ def robots_rules_df(docs: DataFrame) -> DataFrame:
     return robots_docs.mapInPandas(_parse, RULES_SCHEMA)
 
 
-@F.pandas_udf(T.BooleanType())
-def _re_search_udf(pattern: pd.Series, value: pd.Series) -> pd.Series:  # pragma: no cover
-    cache: dict[str, re.Pattern] = {}
-    out = []
-    for p, v in zip(pattern.tolist(), value.tolist()):
-        if p is None or v is None:
-            out.append(False)
-            continue
-        rx = cache.get(p)
-        if rx is None:
-            rx = cache[p] = re.compile(p)
-        out.append(rx.search(v) is not None)
-    return pd.Series(out, dtype="bool")
-
-
 def filter_robots_allowed(
     candidates: DataFrame,
     rules: DataFrame,
     user_agent: str,
     url_col: str = "url",
     host_col: str = "host",
-    broadcast_denied: bool = True,
 ) -> DataFrame:
     """F2 as a dataflow: drop candidates denied by a disallow rule.
 
-    Broadcast the (small) per-host rule table; hosts with no rules pass
-    (allow-all fallback). Only disallow rules are evaluated — the Allow
-    dead-code quirk, see module docstring.
+    One broadcast ``left_anti`` join against this UA's (small) disallow
+    table; hosts with no rules pass (allow-all fallback). Only disallow
+    rules are evaluated — the Allow dead-code quirk, see module docstring.
     """
-    disallows = (
-        rules.where(F.col("rule") == "disallow")
-        .withColumn("_ua_match", _re_search_udf(F.col("agent_re"), F.lit(user_agent)))
-        .where(F.col("_ua_match"))
-        .select(F.col("host").alias("_r_host"), "path_re")
-    )
+    disallows = rules.where(
+        (F.col("rule") == "disallow")
+        & F.regexp_like(F.lit(user_agent), F.col("agent_re"))
+    ).select(F.col("host").alias("_r_host"), "path_re")
     path = F.regexp_replace(
         F.regexp_replace(F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", ""),
         r"#.*$",
         "",
     )
     path = F.when(path.startswith("/"), path).otherwise(F.concat(F.lit("/"), path))
-    # Deny is a property of the URL alone, so collapse the rule-join
-    # multiplicity on the narrow url key and anti-join back — never a
-    # groupBy over the full candidate row (which would shuffle every
-    # column, including map-typed user_data, per wave). The rule join is
-    # broadcast (map-side); the only exchanges are single-column.
-    denied = (
-        candidates.select(F.col(url_col), F.col(host_col))
-        .join(
-            F.broadcast(disallows),
-            F.col(host_col) == F.col("_r_host"),
-            "inner",  # hosts with no disallow rules never appear ⇒ allowed
-        )
-        .where(_re_search_udf(F.col("path_re"), path))
-        .select(url_col)
-        .distinct()
+    return candidates.join(
+        F.broadcast(disallows),
+        (F.col(host_col) == F.col("_r_host")) & F.regexp_like(path, F.col("path_re")),
+        "left_anti",
     )
-    if broadcast_denied:
-        # the denied set is a subset of the candidates that hit a disallow
-        # rule — wave-bounded in the crawler, so the anti-join can build it
-        # broadcast and the candidates never shuffle at all. Pass False for
-        # offline scans where the candidate set (and thus the potential
-        # denied set) is unbounded; AQE then picks the strategy.
-        denied = F.broadcast(denied)
-    return candidates.join(denied, url_col, "left_anti")
 
 
 def crawl_delays_df(rules: DataFrame, user_agent: str) -> DataFrame:
@@ -249,10 +216,9 @@ def crawl_delays_df(rules: DataFrame, user_agent: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    d = (
-        rules.where(F.col("rule") == "delay")
-        .withColumn("_ua_match", _re_search_udf(F.col("agent_re"), F.lit(user_agent)))
-        .where(F.col("_ua_match"))
+    d = rules.where(
+        (F.col("rule") == "delay")
+        & F.regexp_like(F.lit(user_agent), F.col("agent_re"))
     )
     w = W.partitionBy("host").orderBy("section_order")
     return (

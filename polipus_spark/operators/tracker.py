@@ -13,12 +13,14 @@ Spark re-expression — three interchangeable modes:
     equi-join on the key — shuffle-heavy but exact.
   * ``BloomTracker`` — the scale path (J1/J2): the key space is split over
     ``n_buckets`` partitions; each partition owns an independent Bloom
-    bitmap stored as one ``binary`` row in a snapshot table. Probe and
-    insert are ``cogroup(...).applyInPandas`` passes: candidates grouped by
-    bucket meet their partition's bitmap; all bit math is numpy over Arrow
-    batches. The two 60-bit hash seeds (h1, h2: double hashing, Kirsch-
-    Mitzenmacher) are computed **JVM-side** from md5 before the Python
-    stage — no per-row Python anywhere.
+    bitmap stored as one ``binary`` row in a snapshot table. The two 60-bit
+    hash seeds (h1, h2: double hashing, Kirsch-Mitzenmacher) are computed
+    **JVM-side** from md5. The probe is pure Column code: each candidate
+    row joins its bucket's newest bitmap (``n_buckets`` rows, broadcast by
+    the planner) and tests its k bits with ``substr``/``getbit``, so the
+    candidates are read once and no Python stage runs. The insert is a
+    ``cogroup(...).applyInPandas`` pass: keys grouped by bucket meet their
+    partition's bitmap and numpy ORs the bits in over Arrow batches.
   * ``CuckooTracker`` — deletable fallback (J3): the reference Bloom exposes
     ``remove`` (bloomfilter.rb:18-20, backed by a Redis driver); a plain
     Bloom cannot delete, so deletable mode uses a 16-bit-fingerprint,
@@ -32,6 +34,7 @@ normalization happens in the caller.
 from __future__ import annotations
 
 import math
+from decimal import Decimal
 from typing import Iterable
 
 import numpy as np
@@ -41,6 +44,9 @@ from pyspark.sql import functions as F
 
 from polipus_spark.catalog import SnapshotCatalog, SnapshotTable, V_COL
 from polipus_spark.functions.urls import h60
+
+
+_U64_DEC = "decimal(24,0)"  # holds h1//b + i·h2 < 2^60·(k+1) for k ≤ 2^19
 
 
 def _with_hashes(df: DataFrame, key_col: str, n_buckets: int) -> DataFrame:
@@ -186,12 +192,14 @@ def _newest_bitmap(right: pd.DataFrame, n_bytes: int) -> np.ndarray:
 
 
 class BloomTracker:
-    """J1/J2 — per-partition Bloom bitmaps, cogroup-probed, numpy bit math.
+    """J1/J2 — per-partition Bloom bitmaps: Column-expression probe,
+    cogroup insert with numpy bit math.
 
     Sizing (standard Bloom math): m = ceil(-n·ln p / ln²2) total bits split
     evenly over n_buckets (each bucket is an independent filter over its
     hash-share of keys), k = round(m/n·ln2) probes via double hashing
-    pos_i = (h1//b + i·h2) mod m_bucket, computed in uint64 numpy.
+    pos_i = ((h1//b + i·h2) mod 2^64) mod m_bucket — uint64 numpy on insert,
+    the same wrap in decimal on probe.
     Defaults mirror the reference: capacity 1e6, FPR 0.01
     (url_tracker.rb:6-7).
     """
@@ -219,30 +227,33 @@ class BloomTracker:
 
     # -- dataflow API ----------------------------------------------------------
     def probe(self, df: DataFrame, key_col: str) -> DataFrame:
-        """Return df + boolean ``_seen`` column (Bloom membership)."""
-        keys = _with_hashes(
-            df.select(F.col(key_col).alias("key")).distinct(), "key", self.n_buckets
-        )
-        bitmaps = self._current_bitmaps()
-        n_buckets, m_bucket, k = self.n_buckets, self.m_bucket, self.k
+        """Return df + boolean ``_seen`` column (Bloom membership).
 
-        def _probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if len(left) == 0:
-                return pd.DataFrame({"key": [], "_seen": []})
-            bm = _newest_bitmap(right, m_bucket // 8)
-            byte_idx, masks = _bloom_positions(
-                left["_h1"].to_numpy(), left["_h2"].to_numpy(), n_buckets, m_bucket, k
-            )
-            seen = np.all((bm[byte_idx] & masks) == masks, axis=1)
-            return pd.DataFrame({"key": left["key"], "_seen": seen})
-
-        seen = (
-            keys.groupby("_bucket")
-            .cogroup(bitmaps.groupby("bucket"))
-            .applyInPandas(_probe, "key string, _seen boolean")
+        Each row joins its bucket's newest bitmap (``n_buckets`` rows, so the
+        planner broadcasts it) and tests its k bits as Column expressions.
+        The positions replay ``_bloom_positions``' uint64 arithmetic in
+        decimal — ``i·h2`` passes 2^64 once k > 16, where BIGINT would raise
+        under ANSI — so the verdicts equal the numpy insert path's bits.
+        """
+        if not self.table.exists():
+            return df.withColumn("_seen", F.lit(False))
+        bitmaps = self._current_bitmaps().select(
+            F.col("bucket").alias("_bm_bucket"), F.col("bitmap").alias("_bm")
         )
-        out = df.join(seen, df[key_col] == seen["key"], "left").drop("key")
-        return out.withColumn("_seen", F.coalesce(F.col("_seen"), F.lit(False)))
+        hashed = _with_hashes(df, key_col, self.n_buckets)
+        base = F.expr(f"_h1 div {self.n_buckets}").cast(_U64_DEC)
+        step = F.col("_h2").cast(_U64_DEC)
+        two_64 = F.lit(Decimal(2**64)).cast(_U64_DEC)
+        seen = F.col("_bm").isNotNull()
+        for i in range(self.k):
+            pos = (F.pmod(base + step * i, two_64) % self.m_bucket).cast("bigint")
+            byte = F.substr(F.col("_bm"), F.shiftright(pos, 3) + 1, F.lit(1))
+            byte = F.conv(F.hex(byte), 16, 10)
+            seen = seen & (F.getbit(byte.cast("int"), pos.bitwiseAND(7)) == 1)
+        out = hashed.join(bitmaps, F.col("_bucket") == F.col("_bm_bucket"), "left")
+        return out.withColumn("_seen", F.coalesce(seen, F.lit(False))).drop(
+            "_h1", "_h2", "_bucket", "_bm_bucket", "_bm"
+        )
 
     def filter_unseen(self, df: DataFrame, key_col: str) -> DataFrame:
         return self.probe(df, key_col).where(~F.col("_seen")).drop("_seen")

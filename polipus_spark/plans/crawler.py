@@ -633,21 +633,21 @@ class PolipusCrawler:
             for extra in to_push[1:]:
                 batch = batch.unionByName(extra)
             batch = batch.persist()
-            if batch.count():
-                enqueued, new_next_seq, appended = self.frontier.push(
-                    batch, wave=wave, next_seq=next_seq
+            # an empty batch appends nothing: push returns (0, next_seq, None)
+            enqueued, new_next_seq, appended = self.frontier.push(
+                batch, wave=wave, next_seq=next_seq
+            )
+            if appended is not None:
+                # J2: mark seen at ENQUEUE time (§3.2) — exactly the link
+                # rows that survived in-batch dedup and were appended.
+                # Seeds and retries (link_pos<0) are never tracker-marked
+                # (add_url skips the tracker, lib/polipus.rb:359-363).
+                self.tracker.mark_seen(
+                    appended.where(~F.col("is_seed") & (F.col("link_pos") >= 0)),
+                    "tracker_key",
+                    wave=wave,
                 )
-                if appended is not None:
-                    # J2: mark seen at ENQUEUE time (§3.2) — exactly the link
-                    # rows that survived in-batch dedup and were appended.
-                    # Seeds and retries (link_pos<0) are never tracker-marked
-                    # (add_url skips the tracker, lib/polipus.rb:359-363).
-                    self.tracker.mark_seen(
-                        appended.where(~F.col("is_seed") & (F.col("link_pos") >= 0)),
-                        "tracker_key",
-                        wave=wave,
-                    )
-                    appended.unpersist()
+                appended.unpersist()
             batch.unpersist()
 
         m["enqueued"] = enqueued

@@ -123,3 +123,63 @@ def test_exact_incremental_probe_after_compaction(spark, work_dir):
     plan = t._current()._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     assert t.seen_keys() == {"b", "c", "d"}
+
+
+@pytest.mark.parametrize(
+    "capacity,error_rate,n_buckets,k",
+    [(200_000, 1e-7, 8, 23), (1_000_000, 0.01, 32, 7)],
+)
+def test_bloom_probe_matches_numpy_positions(spark, work_dir, capacity,
+                                             error_rate, n_buckets, k):
+    """JVM probe verdicts ≡ numpy ``_bloom_positions`` verdicts on the same
+    committed bitmaps: marked keys, unmarked keys (some of them false
+    positives, from one deliberately dense bucket) and a bucket with no
+    bitmap row. At k = 23, i·h2 passes 2^64 and the positions wrap."""
+    import hashlib
+
+    import numpy as np
+
+    from polipus_spark.operators.tracker import _bloom_positions
+
+    def hashes(key):
+        hx = hashlib.md5(key.encode()).hexdigest()
+        return int(hx[:15], 16), int(hx[15:30], 16)
+
+    t = BloomTracker(SnapshotCatalog(spark, work_dir), capacity=capacity,
+                     error_rate=error_rate, n_buckets=n_buckets)
+    assert t.k == k
+    keys = [f"http://h{i % 17}.example/p/{i}?q={i % 5}" for i in range(6000)]
+    h1, h2 = np.array([hashes(u) for u in keys], dtype=np.int64).T
+    bucket = h1 % n_buckets
+    empty_bucket, dense_bucket = 0, 1
+    marked = [u for i, (u, b) in enumerate(zip(keys, bucket))
+              if b != empty_bucket and i % 3 == 0]
+    t.mark_seen(spark.createDataFrame([(u,) for u in marked], "key string"), "key")
+    # OR dense random bits into one bucket so unmarked keys hit false positives
+    current = {r["bucket"]: bytes(r["bitmap"]) for r in t._current_bitmaps().collect()}
+    density = 0.5 ** (1.0 / k)  # P(false positive) = density^k = 1/2
+    rng = np.random.default_rng(7)
+    noise = np.packbits(rng.random(t.m_bucket) < density, bitorder="little")
+    dense = np.frombuffer(current[dense_bucket], dtype=np.uint8) | noise
+    t.table.append(spark.createDataFrame([(dense_bucket, dense.tobytes())],
+                                         "bucket int, bitmap binary"), op="bloom_or")
+    current[dense_bucket] = dense.tobytes()
+    assert empty_bucket not in current
+
+    got = {r["key"]: r["_seen"] for r in t.probe(
+        spark.createDataFrame([(u,) for u in keys], "key string"), "key").collect()}
+
+    byte_idx, masks = _bloom_positions(h1, h2, n_buckets, t.m_bucket, k)
+    want = {}
+    for j, u in enumerate(keys):
+        bm = current.get(int(bucket[j]))
+        bits = None if bm is None else np.frombuffer(bm, dtype=np.uint8)[byte_idx[j]]
+        want[u] = bits is not None and bool(np.all((bits & masks[j]) == masks[j]))
+    assert got == want
+    marked_set = set(marked)
+    assert all(want[u] for u in marked)
+    unmarked = [want[u] for u in keys if u not in marked_set]
+    assert any(unmarked) and not all(unmarked)  # false positives and misses
+    assert not any(want[u] for u, b in zip(keys, bucket) if b == empty_bucket)
+    wraps = (h1 // n_buckets).astype(object) + (k - 1) * h2.astype(object) >= 2**64
+    assert wraps.any() == (k == 23)

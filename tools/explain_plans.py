@@ -260,11 +260,12 @@ def main() -> None:
         "broadcast(8 queries), broadcast left-anti exclusion of the top-k "
         "positives, md5-rank window per query — no corpus-sized shuffle "
         "on the score path.",
-        "j1_bloom_probe": "J1 Bloom probe (r5): JVM-side md5 hash seeds, "
-        "ONE cogroup of (keys by bucket) with (bitmaps by bucket) into "
-        "FlatMapCoGroupsInPandas — the numpy bit math runs once per "
-        "bucket partition; keys never cross buckets, bitmaps never "
-        "leave theirs.",
+        "j1_bloom_probe": "J1 Bloom probe: JVM-side md5 hash seeds; each "
+        "key joins its bucket's newest bitmap (n_buckets rows, broadcast "
+        "by the planner) and its k bits are tested as Column expressions "
+        "(decimal position math, substr + getbit) — the keys are read "
+        "once, never shuffled, and no Python stage runs. The insert "
+        "(mark_seen) is the numpy cogroup that builds the bitmaps.",
     }
     # picks whose demonstrated property only shows with broadcast joins
     # off (at sf0.01 AQE would broadcast the small side and mask it)
@@ -308,7 +309,7 @@ def main() -> None:
         grab_plan(fetch_wave(wave, docs, redirect_limit=2, wave_rows=None)),
     ))
 
-    # robots gate: narrow-key shuffle only (denied-URL set + left_anti back)
+    # robots gate: one broadcast left_anti join, regexp_like per rule row
     from polipus_spark.functions.robots import (
         filter_robots_allowed, robots_rules_df,
     )
@@ -320,8 +321,10 @@ def main() -> None:
     )
     sections.append((
         "robots gate (F2)",
-        "rule join broadcast; deny multiplicity collapsed on the narrow url "
-        "key and anti-joined back — no full-row-width groupBy shuffle.",
+        "one BroadcastHashJoin LeftAnti of the candidates against this UA's "
+        "disallow rules on host, with regexp_like(path, path_re) as the "
+        "join condition — the candidates are read once and never shuffled, "
+        "and the rule and UA regexes run in the JVM.",
         grab_plan(filter_robots_allowed(cands, rules, "Polipus")),
     ))
 
