@@ -5,7 +5,7 @@ with dedup, robots, redirects) over the deterministic synthetic corpus and
 returns the resulting pages DataFrame.
 
 ``queries()`` exposes every SURVEY §2 operator family plus the
-training-data-pipeline operators (dedup / similarity / text / multimodal) as
+training-data-pipeline operators (dedup / similarity / text) as
 standalone DataFrame queries over the driver's parquet tables at ``sf_dir``.
 ``oracle_sql()`` gives the exact DuckDB equivalent for each. Crawl-shaped
 inputs (frontier rows, URLs, robots paths) are derived deterministically
@@ -22,8 +22,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-from polipus_spark.partitioning import spread as _spread
 
 # ---------------------------------------------------------------------------
 # shared derivation constants (mirrored literally in the oracle SQL)
@@ -2076,201 +2074,6 @@ def q_io_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal metadata plumbing: opaque refs → typed metadata columns."""
-    d = _docs(spark, sf_dir)
-    ref = F.concat(F.lit("img://"), F.col("source"), F.lit("/"), F.col("doc_id").cast("string"))
-    payload = F.to_binary(F.md5(ref), F.lit("hex"))
-    return d.select(
-        "doc_id", ref.alias("media_ref"),
-        F.regexp_extract(ref, r"^([a-z]+)://", 1).alias("media_type"),
-        F.length(payload).cast("bigint").alias("n_bytes"),
-    )
-
-
-def q_media_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decoding (r2 VERDICT item 6): build a deterministic 4×4
-    binary-PPM (P6) payload per doc (48 raster bytes from three md5 hexes),
-    decode it for real in the mapInPandas decoder (header parse + numpy
-    raster), and emit exact integer channel sums. The DuckDB oracle derives
-    the same bytes from the same md5 hex arithmetic — a bit-for-bit check
-    of the decode path with no imaging library on either side."""
-    from polipus_spark.functions.multimodal import image_stats
-
-    d = _docs(spark, sf_dir)
-    s = F.col("doc_id").cast("string")
-    hexbody = F.concat(F.md5(s), F.md5(F.concat(s, F.lit("a"))),
-                       F.md5(F.concat(s, F.lit("b"))))
-    payload = F.concat(F.lit("P6\n4 4\n255\n").cast("binary"),
-                       F.to_binary(hexbody, F.lit("hex")))
-    media = _spread(d).select("doc_id", payload.alias("payload"))
-    return image_stats(media).select(
-        "doc_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
-
-
-def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decoding (r3 VERDICT item 5): build a deterministic
-    stereo 16-bit PCM WAV per doc (static RIFF/fmt/data header + 32 sample
-    bytes from two md5 hexes), decode it for real in the mapInPandas
-    decoder (chunk walk + numpy int16 view), and emit exact |int16| channel
-    sums. The DuckDB oracle derives the same little-endian samples from the
-    same md5 hex arithmetic — bit-for-bit decode check, no audio library on
-    either side."""
-    import struct
-
-    from polipus_spark.functions.multimodal import audio_stats
-
-    d = _docs(spark, sf_dir)
-    s = F.col("doc_id").cast("string")
-    # 16 int16 samples = 8 stereo frames, interleaved L,R
-    hexbody = F.concat(F.md5(F.concat(s, F.lit("w1"))),
-                       F.md5(F.concat(s, F.lit("w2"))))
-    hdr = (b"RIFF" + struct.pack("<I", 68) + b"WAVE"
-           + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 2, 8000, 32000, 4, 16)
-           + b"data" + struct.pack("<I", 32))
-    payload = F.concat(F.to_binary(F.lit(hdr.hex()), F.lit("hex")),
-                       F.to_binary(hexbody, F.lit("hex")))
-    media = _spread(d).select("doc_id", payload.alias("payload"))
-    return audio_stats(media).select(
-        "doc_id", "n_channels", "sample_rate", "n_frames",
-        "sum_abs_l", "sum_abs_r",
-    )
-
-
-def q_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-image decoding (r4): build a real 4×4 RGB PNG per
-    doc — zlib-compressed IDAT, CRC'd chunks, scanlines under filter type 1
-    (Sub) with 48 md5-derived raster bytes — then decode it with the
-    stdlib+numpy PNG decoder (inflate + per-lane unfilter) and emit exact
-    channel sums. The DuckDB oracle never parses PNG: it replays the Sub
-    reconstruction directly as a cumulative byte sum mod 256 per (row,
-    lane) over the same md5 hex — so inflate(deflate(x)) == x and the
-    filter arithmetic are both pinned bit-for-bit. Payload generation is a
-    pandas UDF (zlib/struct per row: test scaffolding, not the operator)."""
-    import binascii
-    import struct
-    import zlib
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from polipus_spark.functions.multimodal import image_stats
-
-    # no type hints: PEP-563 stringized 'pd.Series' can't be resolved by
-    # the hint inference with pandas imported locally; the untyped form
-    # takes the classic SCALAR path
-    @F.pandas_udf(T.BinaryType())
-    def _png(hexes):
-        def chunk(typ: bytes, data: bytes) -> bytes:
-            return (struct.pack(">I", len(data)) + typ + data
-                    + struct.pack(">I", binascii.crc32(typ + data) & 0xFFFFFFFF))
-
-        out = []
-        for hx in hexes:
-            raw = bytes.fromhex(hx)  # 48 bytes = 4 rows × 4 px × RGB
-            scan = b"".join(
-                b"\x01" + raw[r * 12 : (r + 1) * 12] for r in range(4)
-            )
-            ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)
-            out.append(b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                       + chunk(b"IDAT", zlib.compress(scan)) + chunk(b"IEND", b""))
-        return pd.Series(out)
-
-    d = _docs(spark, sf_dir)
-    s = F.col("doc_id").cast("string")
-    hexbody = F.concat(F.md5(F.concat(s, F.lit("p1"))),
-                       F.md5(F.concat(s, F.lit("p2"))),
-                       F.md5(F.concat(s, F.lit("p3"))))
-    media = _spread(d).select("doc_id", _png(hexbody).alias("payload"))
-    return image_stats(media).select(
-        "doc_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
-
-
-def q_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL JPEG decoding (r5, closing the last multimodal gap): build a
-    real baseline JFIF per doc — DQT, SOF0, canonical DHT, Huffman
-    entropy-coded scan with DC-diff coding and byte stuffing — whose four
-    8×8 blocks are constant-valued (quantized DC = v−128 with q=8: the
-    DCT↔IDCT pair is integer-exact for constant blocks, so the decoded
-    pixels equal the md5-derived block bytes exactly). Decode with the
-    stdlib+numpy baseline decoder (segment walk, Huffman decode, dequant,
-    zigzag, matmul IDCT, level shift) and emit exact channel sums. The
-    DuckDB oracle never parses JPEG: it derives the same four block bytes
-    from the md5 hex and sums 64·v per block — Huffman coding, stuffing,
-    dequant, and the IDCT arithmetic are all pinned bit-for-bit. Payload
-    generation is a pandas UDF (test scaffolding, not the operator)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from polipus_spark.functions.multimodal import (
-        encode_baseline_jpeg, image_stats,
-    )
-
-    @F.pandas_udf(T.BinaryType())
-    def _jpeg(hexes):
-        q = np.full((8, 8), 8, dtype=np.int64)
-        out = []
-        for hx in hexes:
-            raw = bytes.fromhex(hx[:8])  # 4 block bytes
-            blocks = []
-            for v in raw:
-                b = np.zeros((8, 8), dtype=np.int64)
-                b[0, 0] = v - 128
-                blocks.append(b)
-            out.append(encode_baseline_jpeg(16, 16, [(1, 1, 1, 0, blocks)],
-                                            {0: q}))
-        return pd.Series(out)
-
-    d = _docs(spark, sf_dir)
-    hexbody = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("j")))
-    media = _spread(d).select("doc_id", _jpeg(hexbody).alias("payload"))
-    return image_stats(media).select(
-        "doc_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
-
-
-def q_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video decoding + frame sampling (r4): build a real 5-frame
-    2×2 C444 YUV4MPEG2 clip per doc (header line, FRAME markers, raw
-    planar YUV — 12 md5-derived bytes per frame), then decode it with the
-    stdlib+numpy Y4M decoder sampling every 2nd frame (0, 2, 4) and emit
-    exact Y/U/V plane sums over the sampled frames. The DuckDB oracle
-    never parses Y4M: raw planar video has no compression, so it re-derives
-    the same bytes from the md5 hex and replays the sampling filter
-    (i % 2 = 0) — decode, plane geometry, and sampling all pinned
-    bit-for-bit. Payload generation is a pandas UDF (test scaffolding,
-    not the operator)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from polipus_spark.functions.multimodal import video_stats
-
-    @F.pandas_udf(T.BinaryType())
-    def _y4m(hexes):
-        out = []
-        for hx in hexes:
-            raw = bytes.fromhex(hx)  # 5 frames × 16 B md5; 12 used each
-            body = b"".join(
-                b"FRAME\n" + raw[i * 16 : i * 16 + 12] for i in range(5)
-            )
-            out.append(b"YUV4MPEG2 W2 H2 F25:1 Ip A1:1 C444\n" + body)
-        return pd.Series(out)
-
-    d = _docs(spark, sf_dir)
-    s = F.col("doc_id").cast("string")
-    hexbody = F.concat(*[
-        F.md5(F.concat(s, F.lit(f"f{i}"))) for i in range(5)
-    ])
-    media = _spread(d).select("doc_id", _y4m(hexbody).alias("payload"))
-    return video_stats(media, every_n=2).select(
-        "doc_id", "width", "height", "n_frames", "n_sampled",
-        "sum_y", "sum_u", "sum_v",
-    )
-
-
 def q_crawl_url_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL pattern mining over the crawl's stored pages (r5): collapse
     numeric path segments to a template (digits → N) and roll up per
@@ -2317,84 +2120,6 @@ def q_events_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", "event_id", "value_cents",
                 F.col("rnk").cast("int").alias("rnk"))
     )
-
-
-def q_dedup_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-level video near-dup (r5): REAL Y4M decode → 60-bit
-    fingerprint per raw frame → self-equi-join on the fingerprint →
-    pairs sharing >= 3 of 5 frames. Fixture: each doc renders a 5-frame
-    2×2 C444 clip whose frames come from the doc's GROUP (doc_id % 32)
-    except frame 2, which is per-doc — so same-group clips are re-cuts
-    sharing exactly 4 frames and cross-group clips share none. Pixels
-    never shuffle (one mapInPandas pass emits ~16 B/frame). Oracle:
-    DuckDB re-derives every frame's hex from the same md5 arithmetic —
-    raw YUV is uncompressed, so no Y4M parsing is needed — and replays
-    fingerprint, join, and threshold itself."""
-    from polipus_spark.functions.multimodal import video_near_pairs
-
-    d = _docs(spark, sf_dir)
-    g = (F.col("doc_id") % 32).cast("string")
-    s = F.col("doc_id").cast("string")
-
-    def _frame_hex(i: int):
-        if i == 2:
-            return F.substring(
-                F.md5(F.concat(F.lit("doc"), s, F.lit("f2"))), 1, 24)
-        return F.substring(
-            F.md5(F.concat(F.lit("vid"), g, F.lit(f"f{i}"))), 1, 24)
-
-    body = F.concat(*[
-        F.concat(F.lit("FRAME\n").cast("binary"),
-                 F.to_binary(_frame_hex(i), F.lit("hex")))
-        for i in range(5)
-    ])
-    payload = F.concat(
-        F.lit("YUV4MPEG2 W2 H2 F25:1 Ip A1:1 C444\n").cast("binary"), body)
-    media = _spread(d).select("doc_id", payload.alias("payload"))
-    return video_near_pairs(media, min_common=3)
-
-
-def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shot-boundary detection (r5): REAL Y4M decode → fingerprint per
-    frame → keyed lag window counts fingerprint changes → shots = cuts+1.
-    Fixture: each doc renders an 8-frame 2×2 C444 clip whose shot
-    structure is md5-derived — a cut lands before frame i iff the first
-    hex nibble of md5('cut'‖doc‖i) is < 8 (p=½ per boundary), and every
-    frame's pixels are md5('sh'‖doc‖shot_idx) — so shot counts vary 1–8
-    across docs. Oracle: DuckDB re-derives the cut bits, the cumulative
-    shot index, each frame's hex, AND the fingerprint from the identical
-    md5 arithmetic, then replays the same lag-compare — the decode path
-    and the window path are both load-bearing."""
-    from polipus_spark.functions.multimodal import video_scene_cuts
-
-    d = _docs(spark, sf_dir)
-    s = F.col("doc_id").cast("string")
-    frames = []
-    shot = F.lit(0)
-    for i in range(8):
-        if i > 0:
-            cut = (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("cut"), s, F.lit(f"_{i}"))),
-                        1, 1),
-                    16, 10,
-                ).cast("int") < 8
-            ).cast("int")
-            shot = shot + cut
-        frames.append(
-            F.substring(
-                F.md5(F.concat(F.lit("sh"), s, F.lit("_"),
-                               shot.cast("string"))), 1, 24))
-    body = F.concat(*[
-        F.concat(F.lit("FRAME\n").cast("binary"),
-                 F.to_binary(fx, F.lit("hex")))
-        for fx in frames
-    ])
-    payload = F.concat(
-        F.lit("YUV4MPEG2 W2 H2 F25:1 Ip A1:1 C444\n").cast("binary"), body)
-    media = _spread(d).select("doc_id", payload.alias("payload"))
-    return video_scene_cuts(media)
 
 
 def q_events_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2832,17 +2557,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_pivot": q_events_pivot,
         "events_json_extract": q_events_json_extract,
         "text_quality_deciles": q_text_quality_deciles,
-        "media_metadata": q_media_metadata,
         # --- new or changed this round ---
         "sim_ivf_topk_quantized": q_sim_ivf_topk_quantized,
-        "audio_stats": q_audio_stats,
         "sketch_distinct_hll": q_sketch_distinct_hll,
         "sketch_distinct_kmv": q_sketch_distinct_kmv,
         "sketch_heavy_hitters": q_sketch_heavy_hitters,
         "sketch_quantiles": q_sketch_quantiles,
-        "png_decode_stats": q_png_decode_stats,
-        "jpeg_decode_stats": q_jpeg_decode_stats,
-        "video_frame_stats": q_video_frame_stats,
         "sim_pq_topk": q_sim_pq_topk,
         "sim_ivfpq_topk": q_sim_ivfpq_topk,
         "sim_ann_recall": q_sim_ann_recall,
@@ -2888,9 +2608,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_changed_pages": q_crawl_changed_pages,
         "text_bpe_segment": q_text_bpe_segment,
         "dedup_keep_best": q_dedup_keep_best,
-        "dedup_media_phash": q_dedup_media_phash,
-        "dedup_audio_fp": q_dedup_audio_fp,
-        "media_decode_stats": q_media_decode_stats,
         "dedup_lines": q_dedup_lines,
         "pack_efficiency": q_pack_efficiency,
         "x4_uuid": q_x4_uuid,
@@ -2942,7 +2659,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_url_templates": q_crawl_url_templates,
         "events_topk_per_group": q_events_topk_per_group,
         "events_zorder": q_events_zorder,
-        "dedup_video_frames": q_dedup_video_frames,
         "sketch_distinct_by_type": q_sketch_distinct_by_type,
         "dedup_spans": q_dedup_spans,
         "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
@@ -2953,31 +2669,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sketch_quantiles_by_type": q_sketch_quantiles_by_type,
         "sketch_cms_by_type": q_sketch_cms_by_type,
         "io_partitioned_read": q_io_partitioned_read,
-        "video_scene_cuts": q_video_scene_cuts,
     }
     # r6 rotation (r5 VERDICT #2, "clear the driver-evidence lag"):
-    # priority 0 = the 24 registry entries with NO driver CORRECTNESS row
+    # priority 0 = the 22 registry entries with NO driver CORRECTNESS row
     # in any round (r5's newest additions — they pass the judge's own
     # oracle re-run, so verifying them first is free coverage),
     # priority 1 = entries whose implementing module was optimized in r6
-    # (dedup/similarity/text/sampling/sketches/multimodal kernel and
+    # (dedup/similarity/text/sampling/sketches kernel and
     # dataflow rewrites — value-identical by construction, but the driver
     # should re-prove it), priority 2 = the long-green untouched tail.
     # Stable sort keeps each band's internal order.
     never_checked = frozenset({
         "crawl_url_templates", "decontaminate_fuzzy", "dedup_containment",
         "dedup_hashembed_near", "dedup_substring", "dedup_substring_scrub",
-        "dedup_video_frames", "events_funnel", "events_retention",
-        "events_topk_per_group", "events_zorder", "io_partitioned_read",
-        "sample_balanced", "sample_dsir", "sim_knn_graph", "sim_mips_topk",
+        "events_funnel", "events_retention", "events_topk_per_group",
+        "events_zorder", "io_partitioned_read", "sample_balanced",
+        "sample_dsir", "sim_knn_graph", "sim_mips_topk",
         "sim_negative_mining", "sketch_distinct_by_type",
         "sketch_quantiles_by_type", "sketch_cms_by_type",
         "text_gopher_rules", "text_hash_embed", "text_tfidf_topk",
-        "video_scene_cuts",
     })
-    changed_prefixes = ("sim_", "dedup_", "sketch_", "media_", "png_",
-                        "jpeg_", "video_", "text_", "sample_", "pack_",
-                        "decontaminate", "corpus_stats", "audio_")
+    changed_prefixes = ("sim_", "dedup_", "sketch_", "text_", "sample_",
+                        "pack_", "decontaminate", "corpus_stats")
 
     def _prio(name: str) -> int:
         if name in never_checked:
@@ -3298,79 +3011,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("_rnk") == 1)
         .select("component", F.col("doc_id").alias("kept_doc"), "n_words")
     )
-
-
-def q_dedup_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-dup dedup (r5): perceptual dHash over REAL image decode
-    + Hamming pigeonhole banding — the media-side twin of SimHash text
-    dedup. Fixture: each doc renders a deterministic 4×4 PPM whose raster
-    is the doc's GROUP image (doc_id % 64 → md5 bytes) with ONE per-doc
-    byte perturbed (pixel (3,3) blue ← md5(doc_id)), so same-group images
-    are visual near-dups (dHash Hamming ≤ 1 — only one horizontal
-    comparison touches the perturbed pixel) and cross-group images are
-    far. Plan: ONE mapInPandas decode+hash pass (no shuffle), then the
-    banded equi-join sees only (id, 8-byte hash) rows — at 100 TB the
-    pixels never cross the wire. Oracle: DuckDB re-derives the pixels
-    from the same md5 arithmetic, recomputes gray/dHash/banding/xor
-    itself — decoder, hash, and join semantics checked independently."""
-    from polipus_spark.functions.dedup import hamming_near_pairs
-    from polipus_spark.functions.multimodal import image_dhash
-
-    d = _docs(spark, sf_dir)
-    s = F.col("doc_id").cast("string")
-    g = (F.col("doc_id") % 64).cast("string")
-    base = F.concat(F.md5(F.concat(F.lit("grp"), g)),
-                    F.md5(F.concat(F.lit("grp"), g, F.lit("a"))),
-                    F.md5(F.concat(F.lit("grp"), g, F.lit("b"))))
-    hexbody = F.concat(F.substring(base, 1, 94), F.substring(F.md5(s), 1, 2))
-    payload = F.concat(F.lit("P6\n4 4\n255\n").cast("binary"),
-                       F.to_binary(hexbody, F.lit("hex")))
-    media = _spread(d).select("doc_id", payload.alias("payload"))
-    sigs = image_dhash(media)
-    return hamming_near_pairs(sigs, n_bits=12, k=1,
-                              id_col="doc_id", hash_col="dhash")
-
-
-def q_dedup_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio near-dup dedup (r5): energy-delta acoustic fingerprint over
-    REAL WAV decode + Hamming pigeonhole banding — closes the dedup ×
-    modality matrix (text SimHash, embedding LSH, image dHash, video
-    frame-hash, now audio). Fixture: each doc renders a deterministic
-    mono 16-bit PCM WAV (64 samples from 8 md5 hexes) whose waveform is
-    the doc's GROUP clip (doc_id % 64) with the final sample's high byte
-    perturbed per-doc (md5(doc_id)), so same-group clips are acoustic
-    near-dups — only the last analysis frame's energy moves, touching at
-    most fingerprint bit 14 → Hamming ≤ 1 — and cross-group clips are
-    far. Plan: ONE mapInPandas decode+fingerprint pass (no shuffle; the
-    waveforms never cross the wire), then the banded equi-join sees only
-    (id, 15-bit fingerprint) rows. Oracle: DuckDB re-derives the samples
-    from the same md5 arithmetic and recomputes frame energies, delta
-    bits, banding, and xor itself — decoder, fingerprint, and join
-    semantics checked independently. (Reference analog: non-HTML bodies
-    pass through stores untyped, page.rb:125-127; this is the curation
-    layer the reference lacks.)"""
-    import struct
-
-    from polipus_spark.functions.dedup import hamming_near_pairs
-    from polipus_spark.functions.multimodal import audio_fingerprint
-
-    d = _docs(spark, sf_dir)
-    s = F.col("doc_id").cast("string")
-    g = (F.col("doc_id") % 64).cast("string")
-    base = F.concat(*[
-        F.md5(F.concat(F.lit("afp"), g, F.lit(str(i)))) for i in range(8)
-    ])
-    hexbody = F.concat(F.substring(base, 1, 254), F.substring(F.md5(s), 1, 2))
-    hdr = (b"RIFF" + struct.pack("<I", 36 + 128) + b"WAVE"
-           + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-           + b"data" + struct.pack("<I", 128))
-    payload = F.concat(F.to_binary(F.lit(hdr.hex()), F.lit("hex")),
-                       F.to_binary(hexbody, F.lit("hex")))
-    media = _spread(d).select("doc_id", payload.alias("payload"))
-    # 64 mono samples / frame_len 4 → 16 analysis frames → 15 delta bits
-    sigs = audio_fingerprint(media)
-    return hamming_near_pairs(sigs, n_bits=15, k=1,
-                              id_col="doc_id", hash_col="afp")
 
 
 def _entry_cdc_session(spark: SparkSession):
@@ -4737,91 +4377,6 @@ def oracle_sql() -> dict[str, str]:
                                                     min_matches=4),
         "text_bpe_merges": _bpe_sql(n_merges=6, min_len=2),
         "text_bpe_segment": _bpe_segment_sql(n_merges=6, min_len=2),
-        "dedup_media_phash": """
-          WITH hx AS (
-            SELECT doc_id,
-                   substr(md5('grp' || CAST(doc_id % 64 AS VARCHAR))
-                       || md5('grp' || CAST(doc_id % 64 AS VARCHAR) || 'a')
-                       || md5('grp' || CAST(doc_id % 64 AS VARCHAR) || 'b'),
-                       1, 94)
-                   || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS hx
-            FROM documents),
-          px AS (
-            SELECT doc_id, p,
-                   (CAST(concat('0x', substr(hx, CAST(p*6+1 AS INT), 2)) AS BIGINT)
-                  + CAST(concat('0x', substr(hx, CAST(p*6+3 AS INT), 2)) AS BIGINT)
-                  + CAST(concat('0x', substr(hx, CAST(p*6+5 AS INT), 2)) AS BIGINT))
-                   // 3 AS gray
-            FROM hx, unnest(range(0, 16)) AS t(p)),
-          dh AS (
-            SELECT m.doc_id,
-                   CAST(sum(CASE WHEN ga.gray > gb.gray
-                            THEN 1 << CAST(m.j AS INT) ELSE 0 END) AS BIGINT) AS sh
-            FROM (SELECT doc_id, j, (j // 3) * 4 + (j % 3) AS pa,
-                         (j // 3) * 4 + (j % 3) + 1 AS pb
-                  FROM documents, unnest(range(0, 12)) AS t(j)) m
-            JOIN px ga ON ga.doc_id = m.doc_id AND ga.p = m.pa
-            JOIN px gb ON gb.doc_id = m.doc_id AND gb.p = m.pb
-            GROUP BY m.doc_id),
-          banded AS (
-            SELECT doc_id, 0 AS band, sh & 63 AS bits, sh FROM dh
-            UNION ALL
-            SELECT doc_id, 1, (sh >> 6) & 63, sh FROM dh),
-          cand AS (
-            SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b,
-                   l.sh AS sa, r.sh AS sb
-            FROM banded l JOIN banded r
-              ON l.band = r.band AND l.bits = r.bits AND l.doc_id < r.doc_id)
-          SELECT id_a, id_b,
-                 CAST(bit_count(xor(sa, sb)) AS INT) AS hamming
-          FROM cand WHERE bit_count(xor(sa, sb)) <= 1
-        """,
-        "dedup_audio_fp": """
-          WITH hx AS (
-            SELECT doc_id,
-                   substr(md5('afp' || CAST(doc_id % 64 AS VARCHAR) || '0')
-                       || md5('afp' || CAST(doc_id % 64 AS VARCHAR) || '1')
-                       || md5('afp' || CAST(doc_id % 64 AS VARCHAR) || '2')
-                       || md5('afp' || CAST(doc_id % 64 AS VARCHAR) || '3')
-                       || md5('afp' || CAST(doc_id % 64 AS VARCHAR) || '4')
-                       || md5('afp' || CAST(doc_id % 64 AS VARCHAR) || '5')
-                       || md5('afp' || CAST(doc_id % 64 AS VARCHAR) || '6')
-                       || md5('afp' || CAST(doc_id % 64 AS VARCHAR) || '7'),
-                       1, 254)
-                   || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS h
-            FROM documents),
-          -- sample j (0..63) is a little-endian int16 at hex chars 4j+1..4j+4
-          sm AS (
-            SELECT doc_id, j, CASE WHEN raw < 32768 THEN raw
-                                   ELSE raw - 65536 END AS v
-            FROM (SELECT doc_id, j,
-                         CAST(concat('0x', substr(h, CAST(j*4+3 AS INT), 2),
-                                     substr(h, CAST(j*4+1 AS INT), 2))
-                              AS BIGINT) AS raw
-                  FROM hx, unnest(range(0, 64)) AS t(j))),
-          en AS (
-            SELECT doc_id, j // 4 AS f, sum(abs(v)) AS e
-            FROM sm GROUP BY doc_id, j // 4),
-          fp AS (
-            SELECT a.doc_id,
-                   CAST(sum(CASE WHEN b.e > a.e
-                            THEN 1 << CAST(a.f AS INT) ELSE 0 END) AS BIGINT)
-                     AS afp
-            FROM en a JOIN en b ON b.doc_id = a.doc_id AND b.f = a.f + 1
-            GROUP BY a.doc_id),
-          banded AS (
-            SELECT doc_id, 0 AS band, afp & 255 AS bits, afp FROM fp
-            UNION ALL
-            SELECT doc_id, 1, (afp >> 8) & 127, afp FROM fp),
-          cand AS (
-            SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b,
-                   l.afp AS sa, r.afp AS sb
-            FROM banded l JOIN banded r
-              ON l.band = r.band AND l.bits = r.bits AND l.doc_id < r.doc_id)
-          SELECT id_a, id_b,
-                 CAST(bit_count(xor(sa, sb)) AS INT) AS hamming
-          FROM cand WHERE bit_count(xor(sa, sb)) <= 1
-        """,
         "events_asof_join": """
           WITH views AS (
             SELECT user_id, ts, max(event_id) AS view_id
@@ -4892,50 +4447,6 @@ def oracle_sql() -> dict[str, str]:
               WHERE q.vec_id < 8 AND q.vec_id <> c.vec_id)
             WHERE rank <= 5) e
             ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-        """,
-        "media_decode_stats": """
-          SELECT doc_id, CAST(4 AS INT) AS width, CAST(4 AS INT) AS height,
-                 CAST(list_sum(list_transform(range(0, 16),
-                   i -> CAST(concat('0x',
-                     substr(hx, CAST(i * 6 + 1 AS INT), 2)) AS BIGINT)))
-                   AS BIGINT) AS sum_r,
-                 CAST(list_sum(list_transform(range(0, 16),
-                   i -> CAST(concat('0x',
-                     substr(hx, CAST(i * 6 + 3 AS INT), 2)) AS BIGINT)))
-                   AS BIGINT) AS sum_g,
-                 CAST(list_sum(list_transform(range(0, 16),
-                   i -> CAST(concat('0x',
-                     substr(hx, CAST(i * 6 + 5 AS INT), 2)) AS BIGINT)))
-                   AS BIGINT) AS sum_b
-          FROM (SELECT doc_id,
-                       md5(s) || md5(s || 'a') || md5(s || 'b') AS hx
-                FROM (SELECT doc_id, CAST(doc_id AS VARCHAR) AS s
-                      FROM documents))
-        """,
-        "audio_stats": """
-          WITH hx AS (
-            SELECT doc_id,
-                   md5(CAST(doc_id AS VARCHAR) || 'w1')
-                   || md5(CAST(doc_id AS VARCHAR) || 'w2') AS h
-            FROM documents),
-          -- sample j (0..15) is a little-endian int16 at hex chars 4j+1..4j+4:
-          -- concat hi byte (4j+3) then lo byte (4j+1) to read it big-endian
-          sm AS (
-            SELECT doc_id, j, CASE WHEN raw < 32768 THEN raw
-                                   ELSE raw - 65536 END AS v
-            FROM (SELECT doc_id, j,
-                         CAST(concat('0x', substr(h, CAST(j*4+3 AS INT), 2),
-                                     substr(h, CAST(j*4+1 AS INT), 2))
-                              AS BIGINT) AS raw
-                  FROM hx, unnest(range(0, 16)) AS t(j)))
-          SELECT doc_id, CAST(2 AS INT) AS n_channels,
-                 CAST(8000 AS INT) AS sample_rate,
-                 CAST(8 AS BIGINT) AS n_frames,
-                 CAST(sum(CASE WHEN j % 2 = 0 THEN abs(v) END) AS BIGINT)
-                   AS sum_abs_l,
-                 CAST(sum(CASE WHEN j % 2 = 1 THEN abs(v) END) AS BIGINT)
-                   AS sum_abs_r
-          FROM sm GROUP BY doc_id
         """,
         "corpus_stats": f"""
           SELECT {_lang_case_sql()} AS lang,
@@ -5127,30 +4638,6 @@ def oracle_sql() -> dict[str, str]:
           GROUP BY a.doc_id
         """,
         "events_zorder": _events_zorder_oracle_sql(),
-        "dedup_video_frames": """
-          WITH fr AS (
-            SELECT doc_id, i.i AS frame_idx,
-                   CASE WHEN i.i = 2
-                        THEN substr(md5(concat('doc', CAST(doc_id AS
-                               VARCHAR), 'f2')), 1, 24)
-                        ELSE substr(md5(concat('vid',
-                               CAST(doc_id % 32 AS VARCHAR),
-                               'f', CAST(i.i AS VARCHAR))), 1, 24)
-                   END AS fhex
-            FROM documents, unnest(range(0, 5)) i(i)
-          ),
-          f AS (
-            SELECT DISTINCT doc_id AS id,
-                   CAST(concat('0x', substr(md5(fhex), 1, 15)) AS BIGINT)
-                     AS fh
-            FROM fr
-          )
-          SELECT a.id AS id_a, b.id AS id_b,
-                 CAST(count(*) AS BIGINT) AS n_common
-          FROM f a JOIN f b ON a.fh = b.fh AND a.id < b.id
-          GROUP BY a.id, b.id
-          HAVING count(*) >= 3
-        """,
         "events_topk_per_group": """
           SELECT event_type, event_id,
                  CAST(round(value * 100) AS BIGINT) AS value_cents,
@@ -5756,36 +5243,6 @@ def oracle_sql() -> dict[str, str]:
                       AS BIGINT) AS seq
           FROM documents
         """,
-        "video_scene_cuts": """
-          WITH f AS (
-            SELECT doc_id, i.i AS idx,
-                   CASE WHEN i.i = 0 THEN 0
-                        WHEN CAST(concat('0x', substr(md5(concat('cut',
-                               CAST(doc_id AS VARCHAR), '_',
-                               CAST(i.i AS VARCHAR))), 1, 1)) AS INT) < 8
-                        THEN 1 ELSE 0 END AS cut
-            FROM documents, unnest(range(0, 8)) i(i)),
-          s AS (
-            SELECT doc_id, idx,
-                   sum(cut) OVER (PARTITION BY doc_id ORDER BY idx
-                                  ROWS UNBOUNDED PRECEDING) AS shot
-            FROM f),
-          h AS (
-            SELECT doc_id, idx,
-                   CAST(concat('0x', substr(md5(substr(md5(concat('sh',
-                          CAST(doc_id AS VARCHAR), '_',
-                          CAST(shot AS VARCHAR))), 1, 24)), 1, 15))
-                        AS BIGINT) AS fh
-            FROM s),
-          c AS (
-            SELECT doc_id, fh,
-                   lag(fh) OVER (PARTITION BY doc_id ORDER BY idx) AS pfh
-            FROM h)
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sampled,
-                 CAST(1 + sum(CASE WHEN pfh IS NOT NULL AND fh <> pfh
-                                   THEN 1 ELSE 0 END) AS BIGINT) AS n_shots
-          FROM c GROUP BY doc_id
-        """,
         "io_partitioned_read": """
           SELECT doc_id, lang, md5(text) AS text_md5
           FROM documents WHERE lang IN ('en', 'fr')
@@ -5866,13 +5323,6 @@ def oracle_sql() -> dict[str, str]:
                 HAVING total_qty > 250) big
           JOIN orders ON big.l_orderkey = o_orderkey
           ORDER BY total_qty DESC, o_orderkey ASC
-        """,
-        "media_metadata": """
-          SELECT doc_id,
-                 'img://' || source || '/' || CAST(doc_id AS VARCHAR) AS media_ref,
-                 'img' AS media_type,
-                 CAST(16 AS BIGINT) AS n_bytes
-          FROM documents
         """,
         "streaming_sessionize_parity": """
           SELECT user_id, event_id,
@@ -5987,70 +5437,6 @@ def oracle_sql() -> dict[str, str]:
     # by construction: the true top-k must survive the k·overfetch cut)
     out["sim_ivf_topk_indexed"] = out["sim_ivf_topk"]
     out["sim_ivf_topk_quantized"] = out["sim_ivf_topk"]
-    # PNG decode (r4): the oracle replays Sub-filter (type 1)
-    # reconstruction — recon[x] = cumulative sum of raster bytes mod 256
-    # along x per (row, byte-lane) — over the same 48 md5-derived bytes the
-    # Spark side zlib-compresses into a real PNG and decodes for real.
-    # byte j: row = j//12, pixel x = (j%12)//3, lane (R/G/B) = j%3.
-    out["png_decode_stats"] = """
-      WITH hx AS (
-        SELECT doc_id, md5(s || 'p1') || md5(s || 'p2') || md5(s || 'p3') AS h
-        FROM (SELECT doc_id, CAST(doc_id AS VARCHAR) AS s FROM documents)),
-      b AS (
-        SELECT doc_id, j,
-               CAST(concat('0x', substr(h, CAST(j*2+1 AS INT), 2)) AS INT) AS v,
-               j // 12 AS row, (j % 12) // 3 AS x, j % 3 AS lane
-        FROM hx, unnest(range(0, 48)) AS t(j)),
-      r AS (
-        SELECT doc_id, lane,
-               CAST(sum(v) OVER (PARTITION BY doc_id, row, lane
-                                 ORDER BY x) % 256 AS BIGINT) AS recon
-        FROM b)
-      SELECT doc_id, CAST(4 AS INT) AS width, CAST(4 AS INT) AS height,
-             CAST(sum(CASE WHEN lane = 0 THEN recon END) AS BIGINT) AS sum_r,
-             CAST(sum(CASE WHEN lane = 1 THEN recon END) AS BIGINT) AS sum_g,
-             CAST(sum(CASE WHEN lane = 2 THEN recon END) AS BIGINT) AS sum_b
-      FROM r GROUP BY doc_id
-    """
-    # JPEG decode (r5): the Spark side Huffman-encodes four CONSTANT 8×8
-    # blocks (quantized DC = v−128, q=8 → integer-exact IDCT) into a real
-    # JFIF and decodes it for real; the oracle derives the same four block
-    # bytes from the md5 hex and sums 64·v per block — gray replicates to
-    # all three channels.
-    out["jpeg_decode_stats"] = """
-      WITH b AS (
-        SELECT doc_id,
-               CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || 'j'),
-                                        CAST(j*2+1 AS INT), 2)) AS INT) AS v
-        FROM documents, unnest(range(0, 4)) AS t(j))
-      SELECT doc_id, CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
-             CAST(sum(v) * 64 AS BIGINT) AS sum_r,
-             CAST(sum(v) * 64 AS BIGINT) AS sum_g,
-             CAST(sum(v) * 64 AS BIGINT) AS sum_b
-      FROM b GROUP BY doc_id
-    """
-    # Y4M video decode + frame sampling (r4): raw planar video has no
-    # compression, so the oracle re-derives the frame bytes straight from
-    # the md5 hex and replays the every-2nd-frame sampling. Frame i's 12
-    # bytes live at hex offset i*32 (each md5 contributes 16 bytes, 12
-    # used); byte j's lane is j//4 (2×2 C444 planes: Y=0-3, U=4-7, V=8-11).
-    out["video_frame_stats"] = """
-      WITH f AS (
-        SELECT doc_id,
-               md5(CAST(doc_id AS VARCHAR) || 'f' || CAST(i AS VARCHAR)) AS h
-        FROM documents, unnest(range(0, 5)) AS t(i)
-        WHERE i % 2 = 0),
-      b AS (
-        SELECT doc_id, j // 4 AS lane,
-               CAST(concat('0x', substr(h, CAST(j*2+1 AS INT), 2)) AS INT) AS v
-        FROM f, unnest(range(0, 12)) AS t(j))
-      SELECT doc_id, CAST(2 AS INT) AS width, CAST(2 AS INT) AS height,
-             CAST(5 AS INT) AS n_frames, CAST(3 AS INT) AS n_sampled,
-             CAST(sum(CASE WHEN lane = 0 THEN v END) AS BIGINT) AS sum_y,
-             CAST(sum(CASE WHEN lane = 1 THEN v END) AS BIGINT) AS sum_u,
-             CAST(sum(CASE WHEN lane = 2 THEN v END) AS BIGINT) AS sum_v
-      FROM b GROUP BY doc_id
-    """
     # --- deterministic sketches (r4, polipus_spark/functions/sketches.py) ---
     # shared HLL registers: 60-bit md5 hash, bucket = h % 64, rho = leading
     # zeros of the high 54 bits + 1 (bin() = Spark conv(...,10,2): minimal

@@ -299,17 +299,16 @@ def run_queries(spark: SparkSession, stop_after: float | None = None) -> dict[st
         "decontaminate", "sample_stratified", "text_chunking", "corpus_stats",
         "dedup_spans", "text_vocab_topk", "text_lm_score",
         "sim_quantize_int8", "sim_ivf_topk", "tpch_q5_style", "tpch_q14_style",
-        "pack_sequences", "sim_ivf_kmeans", "media_decode_stats",
+        "pack_sequences", "sim_ivf_kmeans",
         "dedup_lines", "dedup_semantic", "sim_ivf_topk_indexed",
         # r4 additions: the kernel-ized LSH path (r3's 283 s entry — timing
         # it every round keeps the regression visible), the quantized IVF
-        # serving layout, the WAV decode, and the deterministic sketches
-        "dedup_embedding_lsh", "sim_ivf_topk_quantized", "audio_stats",
+        # serving layout, and the deterministic sketches
+        "dedup_embedding_lsh", "sim_ivf_topk_quantized",
         "sketch_distinct_hll", "sketch_distinct_kmv", "sketch_heavy_hitters",
         "sketch_quantiles",
-        # r4 additions, second batch: PQ serving path and the real
-        # PNG / Y4M-video decoders
-        "sim_pq_topk", "png_decode_stats", "video_frame_stats",
+        # r4 additions, second batch: PQ serving path
+        "sim_pq_topk",
         # r4 third batch: the composed IVF-PQ serving layout (DPP probe +
         # residual-PQ ADC + float re-rank), the persisted-signature
         # incremental dedup probe, and BPE merge training
@@ -319,11 +318,9 @@ def run_queries(spark: SparkSession, stop_after: float | None = None) -> dict[st
         # r4 fourth batch: degree-oriented triangle counting, local
         # clustering coefficients, and gap-fill + LOCF densification
         "graph_triangles", "graph_clustering", "events_gapfill",
-        # r5: baseline JFIF decode — the last multimodal format
-        "jpeg_decode_stats",
         # r5 second batch: tokenizer application (train + segment) and
         # quality-aware near-dup survivor selection
-        "text_bpe_segment", "dedup_keep_best", "dedup_media_phash",
+        "text_bpe_segment", "dedup_keep_best",
         # r5 third batch: embedding-free semantic near-dup, Gopher rules,
         # EXACTSUBSTR window dedup, DSIR importance weights
         "dedup_hashembed_near", "text_gopher_rules", "dedup_substring",
@@ -331,13 +328,11 @@ def run_queries(spark: SparkSession, stop_after: float | None = None) -> dict[st
         # r5 fourth batch: funnel + retention event analytics, grouped
         # top-k (WindowGroupLimit), and the Z-order clustering key
         "events_funnel", "events_retention", "events_topk_per_group",
-        "events_zorder", "dedup_video_frames", "sketch_distinct_by_type",
-        "dedup_containment",
-        # r5 fifth batch: acoustic-fingerprint near-dup (the audio leg of
-        # the dedup × modality matrix) and the widened TPC-H family
-        # (EXISTS semi-join, top-k after join-agg, decorrelated scalar
-        # subquery, HAVING-first join)
-        "dedup_audio_fp", "tpch_q4_style", "tpch_q10_style",
+        "events_zorder", "sketch_distinct_by_type", "dedup_containment",
+        # r5 fifth batch: the widened TPC-H family (EXISTS semi-join,
+        # top-k after join-agg, decorrelated scalar subquery, HAVING-first
+        # join)
+        "tpch_q4_style", "tpch_q10_style",
         "tpch_q17_style", "tpch_q18_style", "events_rolling",
         "events_outliers", "sim_knn_graph", "io_jsonl_roundtrip",
         "io_csv_roundtrip", "io_bucketed_join", "text_tfidf_topk",
@@ -350,11 +345,11 @@ def run_queries(spark: SparkSession, stop_after: float | None = None) -> dict[st
         "ids_contiguous", "events_pivot", "events_json_extract",
         "text_quality_deciles",
         # r5 seventh batch: epoch take, negative mining, grouped
-        # quantiles, partitioned layout, video shot boundaries,
-        # incremental rollup refresh, and the bit-exact Bloom probe
+        # quantiles, partitioned layout, incremental rollup refresh, and
+        # the bit-exact Bloom probe
         "sample_epoch_take", "sim_negative_mining",
         "sketch_quantiles_by_type", "io_partitioned_read",
-        "video_scene_cuts", "events_rollup_refresh", "j1_bloom_probe",
+        "events_rollup_refresh", "j1_bloom_probe",
         # r5 eighth batch: MIPS reduction, the ANN recall curve, the
         # lang-id confusion matrix, and grouped CMS
         "sim_mips_topk", "sim_recall_curve", "text_langid_confusion",

@@ -830,12 +830,10 @@ def simhash_near_pairs(
     return hamming_near_pairs(s, n_bits=60, k=k)
 
 
-def hamming_near_pairs(sigs: DataFrame, n_bits: int, k: int = 3,
-                       id_col: str = "id",
-                       hash_col: str = "sh") -> DataFrame:
-    """Pairs within Hamming distance ``k`` over any ``n_bits`` integer
-    fingerprint column — the pigeonhole banding shared by text SimHash
-    (60-bit) and image dHash (r5): split the bits into k+1 contiguous
+def hamming_near_pairs(sigs: DataFrame, n_bits: int, k: int = 3) -> DataFrame:
+    """Pairs within Hamming distance ``k`` over an ``n_bits`` integer
+    fingerprint ``sh`` keyed by ``id`` — the pigeonhole banding behind
+    text SimHash (60-bit): split the bits into k+1 contiguous
     bands, equi-join on (band, band_bits), verify with one
     ``bit_count(xor) <= k``. Band width should stay wide enough that a
     random collision is rare (see simhash_near_pairs' 15-bit discussion);
@@ -853,7 +851,7 @@ def hamming_near_pairs(sigs: DataFrame, n_bits: int, k: int = 3,
         widths[i] += 1
     shifts = [sum(widths[:i]) for i in range(n_bands)]
 
-    s = sigs.select(F.col(id_col).alias("id"), F.col(hash_col).alias("sh"))
+    s = sigs.select("id", "sh")
     bands = F.array(*[
         F.struct(
             F.lit(b).alias("band"),
@@ -873,7 +871,7 @@ def hamming_near_pairs(sigs: DataFrame, n_bits: int, k: int = 3,
     # banded self-join re-ran the whole signature subtree per side and
     # shuffled every RAW candidate through a pre-verify distinct —
     # near-dup clusters make Σ|bucket|² large (tens of millions of pairs
-    # per bucket on narrow fingerprints like the 12-bit dHash), so both
+    # per bucket on narrow fingerprints of 12–15 bits), so both
     # the shuffle and a per-pair interpreted popcount are the wrong tier.
     # Here each bucket's (id, sh) members arrive once via one groupBy,
     # the XOR popcount runs as block-wise vectorized numpy inside the

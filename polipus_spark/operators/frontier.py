@@ -50,7 +50,8 @@ class Frontier:
 
     # ------------------------------------------------------------------ push
     def push(
-        self, new_urls: DataFrame, wave: int, next_seq: int
+        self, new_urls: DataFrame, wave: int, next_seq: int,
+        persisted: list | None = None,
     ) -> tuple[int, int, DataFrame | None]:
         """S3: enrich, in-batch dedup (first-in-FIFO wins), assign seq, append.
 
@@ -58,7 +59,9 @@ class Frontier:
         is_seed, user_data, parent_seq, link_pos.
         Returns (n_appended, next_seq_after, appended_df) — appended_df is the
         exact appended rows (persisted) so callers can tracker-mark them
-        without re-reading the table.
+        without re-reading the table. ``persisted`` receives the seq sort
+        frame that keeps appended_df's ``seq`` stable: unpersist both
+        together. An empty push releases both itself.
         """
         o = self.opts
         enriched = (
@@ -83,8 +86,10 @@ class Frontier:
             .where((F.col("_rn") == 1) | F.col("is_seed") | (F.col("link_pos") < 0))
             .drop("_rn")
         )
+        sort_frames: list = []
         with_seq = with_global_seq(
-            deduped, ["parent_seq", "link_pos", "url"], start=next_seq, out_col="seq"
+            deduped, ["parent_seq", "link_pos", "url"], start=next_seq, out_col="seq",
+            persisted=sort_frames,
         )
         out = with_seq.select(*FRONTIER_COLS).persist()
         # One narrow agg instead of a bare count: the same job yields the
@@ -105,8 +110,11 @@ class Frontier:
                                             sorted(per_bucket.items())},
                 },
             )
+            if persisted is not None:
+                persisted.extend(sort_frames)
         else:
-            out.unpersist()
+            for df in [out, *sort_frames]:
+                df.unpersist()
             out = None
         return n, next_seq + n, out
 

@@ -14,9 +14,9 @@ partition. This implements the scalable two-phase version:
   3. one mapInPandas adding offset + local index (vectorized, no per-row
      Python).
 
-The sorted frame is persisted between the two passes so the range
-partitioner's sampled boundaries cannot shift between the count job and the
-assignment job.
+The sorted frame stays persisted between the two passes, and for as long as
+the result is read, so the range partitioner's sampled boundaries cannot
+shift; callers receive it through ``persisted`` and release it with the result.
 """
 
 from __future__ import annotations
@@ -33,14 +33,18 @@ def with_global_seq(
     order_cols: list[str],
     start: int = 0,
     out_col: str = "seq",
+    persisted: list | None = None,
 ) -> DataFrame:
-    """Add dense ``out_col`` = start + global rank by order_cols (a total order)."""
+    """Add dense ``out_col`` = start + global rank by order_cols (a total order).
+    ``persisted`` receives the persisted sorted frame (exact_top_k pattern)."""
     from pyspark import StorageLevel
 
     sorted_df = df.repartitionByRange(*[F.col(c) for c in order_cols]).sortWithinPartitions(
         *[F.col(c) for c in order_cols]
     )
     sorted_df = sorted_df.persist(StorageLevel.MEMORY_AND_DISK)
+    if persisted is not None:
+        persisted.append(sorted_df)
     with_pid = sorted_df.withColumn("_pid", F.spark_partition_id())
     counts = {
         r["_pid"]: r["cnt"]

@@ -203,7 +203,13 @@ class PolipusCrawler:
                 T.StructField("link_pos", T.IntegerType()),
             ]),
         )
-        n, _, _ = self.frontier.push(seeds_df, wave=wave, next_seq=next_seq)
+        push_frames: list = []
+        n, _, appended = self.frontier.push(
+            seeds_df, wave=wave, next_seq=next_seq, persisted=push_frames
+        )
+        if appended is not None:
+            for df in [appended, *push_frames]:
+                df.unpersist()
         # NB: seeds are NOT tracker-marked (add_url skips the tracker,
         # lib/polipus.rb:359-363) — hence "seeds always re-fetched".
         return n
@@ -634,8 +640,9 @@ class PolipusCrawler:
                 batch = batch.unionByName(extra)
             batch = batch.persist()
             # an empty batch appends nothing: push returns (0, next_seq, None)
+            push_frames: list = []  # the seq sort frame, released with appended
             enqueued, new_next_seq, appended = self.frontier.push(
-                batch, wave=wave, next_seq=next_seq
+                batch, wave=wave, next_seq=next_seq, persisted=push_frames
             )
             if appended is not None:
                 # J2: mark seen at ENQUEUE time (§3.2) — exactly the link
@@ -647,7 +654,8 @@ class PolipusCrawler:
                     "tracker_key",
                     wave=wave,
                 )
-                appended.unpersist()
+                for df in [appended, *push_frames]:
+                    df.unpersist()
             batch.unpersist()
 
         m["enqueued"] = enqueued

@@ -1,5 +1,5 @@
-"""Training-data pipeline operators: text analysis, dedup, similarity,
-multimodal plumbing — correctness on crafted inputs + determinism."""
+"""Training-data pipeline operators: text analysis, dedup, similarity —
+correctness on crafted inputs + determinism."""
 
 import numpy as np
 import pytest
@@ -856,473 +856,6 @@ def test_near_dup_lsh_default_recall(spark):
     assert lsh_bucket_candidates(emb).count() < 0.10 * n * (n - 1) / 2
 
 
-# ------------------------------------------------------------ multimodal
-
-
-def test_media_table_and_features(spark):
-    from polipus_spark.functions.multimodal import (
-        decode_image,
-        extract_features,
-        frame_sample_plan,
-        media_table_from_docs,
-    )
-    from polipus_spark.sources.corpus import corpus_df, gen_corpus
-
-    docs = corpus_df(spark, gen_corpus(n_hosts=3, max_docs_per_host=6, media_doc_frac=0.5))
-    media = media_table_from_docs(docs)
-    assert media.count() > 0
-    row = media.first()
-    assert row["media_type"] == "img" and row["n_bytes"] == 16
-
-    feats = extract_features(media, fake=True)
-    frow = feats.first()
-    assert len(frow["features"]) == 8
-    # deterministic stub: same payload → same features
-    again = extract_features(media, fake=True).first()
-    assert frow["features"] == again["features"]
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x00", fake=False)
-
-    plan = frame_sample_plan(media, every_n=10)
-    assert plan.count() >= media.count()  # ≥1 frame per media
-
-
-def test_feature_stub_is_md5_derived():
-    from polipus_spark.functions.multimodal import decode_image
-
-    f = decode_image(b"abc", fake=True)
-    assert f.shape == (8,) and f.dtype == np.float64
-
-
-def test_decode_ppm_real():
-    """r3: P6 PPM decodes for REAL (header incl. comment, raster bytes)."""
-    from polipus_spark.functions.multimodal import decode_image
-
-    raster = bytes(range(2 * 3 * 3))  # 2 wide, 3 high
-    payload = b"P6\n# a comment\n2 3\n255\n" + raster
-    img = decode_image(payload)
-    assert img.shape == (3, 2, 3) and img.dtype == np.uint8
-    assert img[0, 0].tolist() == [0, 1, 2]  # first pixel RGB
-    assert img[2, 1].tolist() == [15, 16, 17]  # last pixel
-    with pytest.raises(ValueError, match="truncated"):
-        decode_image(payload[:-1])
-
-
-def test_decode_bmp_real():
-    """r3: uncompressed 24-bit BMP — bottom-up rows, 4-byte padded stride,
-    BGR→RGB flip — via a hand-built 2×2 image."""
-    import struct
-
-    from polipus_spark.functions.multimodal import decode_image
-
-    w = h = 2
-    stride = (w * 3 + 3) & ~3  # 8 bytes (2 px × 3 B = 6, padded)
-    # rows bottom-up, BGR: bottom row = red,green ; top row = blue,white
-    bottom = bytes([0, 0, 255, 0, 255, 0]) + b"\x00\x00"
-    top = bytes([255, 0, 0, 255, 255, 255]) + b"\x00\x00"
-    pixels = bottom + top
-    header = (b"BM" + struct.pack("<IHHI", 54 + len(pixels), 0, 0, 54)
-              + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                            len(pixels), 2835, 2835, 0, 0))
-    img = decode_image(header + pixels)
-    assert img.shape == (2, 2, 3)
-    assert img[1, 0].tolist() == [255, 0, 0]   # bottom-left red (RGB)
-    assert img[1, 1].tolist() == [0, 255, 0]   # bottom-right green
-    assert img[0, 0].tolist() == [0, 0, 255]   # top-left blue
-    assert img[0, 1].tolist() == [255, 255, 255]
-    with pytest.raises(ValueError, match="24-bit"):
-        decode_image(header.replace(struct.pack("<HH", 1, 24),
-                                    struct.pack("<HH", 1, 8)) + pixels)
-    # r3 review fix: truncated BMPs raise ValueError (which image_stats
-    # catches → null row), never struct.error (which would kill the job)
-    with pytest.raises(ValueError, match="truncated"):
-        decode_image(b"BM\x01\x02")
-    with pytest.raises(ValueError, match="truncated"):
-        decode_image(header + pixels[:5])
-
-
-def _png_encode(img, filters):
-    """Minimal PNG encoder for the decoder test: applies the per-row
-    inverse filter (what a real encoder does), splits IDAT in two chunks
-    and inserts an ancillary tEXt chunk to exercise the chunk walk."""
-    import binascii
-    import struct
-    import zlib
-
-    h, w, ch = img.shape
-    stride = w * ch
-    flat = img.reshape(h, stride).astype(int)
-    prev = np.zeros(stride, dtype=int)
-    scan = bytearray()
-    for r, ftype in zip(range(h), filters):
-        rec = flat[r]
-        left = np.concatenate([np.zeros(ch, dtype=int), rec[:-ch]])
-        if ftype == 0:
-            line = rec % 256
-        elif ftype == 1:
-            line = (rec - left) % 256
-        elif ftype == 2:
-            line = (rec - prev) % 256
-        elif ftype == 3:
-            line = (rec - (left + prev) // 2) % 256
-        else:  # Paeth
-            line = np.empty(stride, dtype=int)
-            for x in range(stride):
-                a = int(left[x])
-                b = int(prev[x])
-                c = int(prev[x - ch]) if x >= ch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[x] = (int(rec[x]) - pred) % 256
-        scan += bytes([ftype]) + bytes(line.astype(np.uint8))
-        prev = rec
-
-    def chunk(typ, data):
-        return (struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", binascii.crc32(typ + data) & 0xFFFFFFFF))
-
-    z = zlib.compress(bytes(scan))
-    half = len(z) // 2
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2 if ch == 3 else 6, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"tEXt", b"Comment\x00t") + chunk(b"IDAT", z[:half])
-            + chunk(b"IDAT", z[half:]) + chunk(b"IEND", b""))
-
-
-def test_decode_png_real():
-    """r4: 8-bit truecolor PNG decodes for REAL — zlib inflate, chunk walk
-    (split IDAT, ancillary skip), all five scanline filters reconstructed.
-    Roundtrip a random image with one row per filter type."""
-    from polipus_spark.functions.multimodal import decode_image, decode_png
-
-    rng = np.random.RandomState(7)
-    img = rng.randint(0, 256, size=(5, 4, 3)).astype(np.uint8)
-    payload = _png_encode(img, filters=[0, 1, 2, 3, 4])
-    out = decode_png(payload)
-    assert out.shape == (5, 4, 3) and out.dtype == np.uint8
-    assert np.array_equal(out, img)
-    assert np.array_equal(decode_image(payload), img)
-
-    # RGBA: decode_png keeps alpha, decode_image drops it
-    rgba = rng.randint(0, 256, size=(3, 3, 4)).astype(np.uint8)
-    p4 = _png_encode(rgba, filters=[4, 3, 1])
-    assert np.array_equal(decode_png(p4), rgba)
-    assert np.array_equal(decode_image(p4), rgba[:, :, :3])
-
-    # error paths stay ValueError (image_stats catches → null row)
-    import struct
-
-    with pytest.raises(ValueError, match="truecolor"):
-        # flip color type to 3 (palette) inside IHDR
-        bad = payload.replace(struct.pack(">IIBBBBB", 4, 5, 8, 2, 0, 0, 0),
-                              struct.pack(">IIBBBBB", 4, 5, 8, 3, 0, 0, 0))
-        decode_png(bad)
-    with pytest.raises(ValueError, match="truncated PNG chunk"):
-        # chop mid-IDAT: complete 8-byte chunk header, short data
-        decode_png(payload[: payload.index(b"IDAT") + 5])
-    with pytest.raises(ValueError, match="missing IHDR or IDAT"):
-        decode_png(payload[:8])
-    with pytest.raises(ValueError, match="not a PNG"):
-        decode_png(b"\x89PNX" + payload[4:])
-    # short inflated stream (one scanline chopped off)
-    short = _png_encode(img, filters=[0, 1, 2, 3, 4])
-    import zlib
-
-    scan_full = zlib.decompress(
-        b"".join(_iter_idat(short))
-    )
-    with pytest.raises(ValueError, match="truncated PNG scanline"):
-        decode_png(_rebuild_png_idat(short, zlib.compress(scan_full[:-13])))
-
-
-def _iter_idat(payload):
-    import struct
-
-    pos = 8
-    while pos + 8 <= len(payload):
-        ln, typ = struct.unpack_from(">I4s", payload, pos)
-        if typ == b"IDAT":
-            yield payload[pos + 8 : pos + 8 + ln]
-        pos += 12 + ln
-
-
-def _rebuild_png_idat(payload, new_idat):
-    """Copy a PNG, replacing all IDAT chunks with one new one."""
-    import binascii
-    import struct
-
-    out, pos, done = bytearray(payload[:8]), 8, False
-    while pos + 8 <= len(payload):
-        ln, typ = struct.unpack_from(">I4s", payload, pos)
-        if typ == b"IDAT":
-            if not done:
-                out += (struct.pack(">I", len(new_idat)) + b"IDAT" + new_idat
-                        + struct.pack(">I",
-                                      binascii.crc32(b"IDAT" + new_idat)
-                                      & 0xFFFFFFFF))
-                done = True
-        else:
-            out += payload[pos : pos + 12 + ln]
-        pos += 12 + ln
-    return bytes(out)
-
-
-def test_decode_jpeg_real():
-    """Baseline JFIF decode (r5): constant-DC blocks roundtrip exactly
-    (q=8 makes the DCT↔IDCT pair integer-exact), random AC coefficients
-    match an independent nested-loop IDCT reference bit-for-bit, 4:2:0
-    chroma upsampling + YCbCr→RGB matches the floor(x+0.5) formula, and
-    restart markers reset the DC predictors."""
-    import numpy as np
-
-    from polipus_spark.functions.multimodal import (
-        decode_image, decode_jpeg, encode_baseline_jpeg,
-    )
-
-    q = np.full((8, 8), 8, dtype=np.int64)
-    vals = [0, 255, 17, 200]
-    blocks = []
-    for v in vals:
-        b = np.zeros((8, 8), dtype=np.int64)
-        b[0, 0] = v - 128
-        blocks.append(b)
-    payload = encode_baseline_jpeg(16, 16, [(1, 1, 1, 0, blocks)], {0: q})
-    img = decode_jpeg(payload)
-    assert img.shape == (16, 16, 1)
-    exp = np.zeros((16, 16), dtype=np.uint8)
-    exp[0:8, 0:8], exp[0:8, 8:16] = vals[0], vals[1]
-    exp[8:16, 0:8], exp[8:16, 8:16] = vals[2], vals[3]
-    assert np.array_equal(img[:, :, 0], exp)
-    # decode_image replicates grayscale to 3 channels
-    assert np.array_equal(decode_image(payload)[:, :, 1], exp)
-
-    # full AC path (run-length, ZRL, magnitude bits) vs an independent
-    # nested-loop IDCT with the same floor(x+0.5) rounding
-    rng = np.random.RandomState(7)
-    coef = rng.randint(-20, 21, size=(8, 8))
-    payload = encode_baseline_jpeg(8, 8, [(1, 1, 1, 0, [coef])], {0: q})
-    got = decode_jpeg(payload)[:, :, 0].astype(np.int64)
-    ref = np.zeros((8, 8))
-    for x in range(8):
-        for y in range(8):
-            s = 0.0
-            for u in range(8):
-                for v in range(8):
-                    cu = (0.5 ** 0.5) if u == 0 else 1.0
-                    cv = (0.5 ** 0.5) if v == 0 else 1.0
-                    s += (cu * cv / 4 * coef[u, v] * 8
-                          * np.cos((2 * x + 1) * u * np.pi / 16)
-                          * np.cos((2 * y + 1) * v * np.pi / 16))
-            ref[x, y] = s
-    ref = np.clip(np.floor(ref + 128 + 0.5), 0, 255).astype(np.int64)
-    assert np.array_equal(got, ref)
-
-    # 4:2:0 color: constant planes decode to the exact conversion formula
-    yb = []
-    for dc in (10, -10, 50, -50):
-        b = np.zeros((8, 8), dtype=int)
-        b[0, 0] = dc
-        yb.append(b)
-    cb = np.zeros((8, 8), dtype=int)
-    cb[0, 0] = 30
-    cr = np.zeros((8, 8), dtype=int)
-    cr[0, 0] = -20
-    payload = encode_baseline_jpeg(
-        16, 16, [(1, 2, 2, 0, yb), (2, 1, 1, 0, [cb]), (3, 1, 1, 0, [cr])],
-        {0: q})
-    img = decode_jpeg(payload)
-    assert img.shape == (16, 16, 3)
-    yv, cbv, crv = 138.0, 158.0, 108.0
-    expect = (
-        np.clip(np.floor(yv + 1.402 * (crv - 128) + 0.5), 0, 255),
-        np.clip(np.floor(yv - 0.344136 * (cbv - 128)
-                         - 0.714136 * (crv - 128) + 0.5), 0, 255),
-        np.clip(np.floor(yv + 1.772 * (cbv - 128) + 0.5), 0, 255),
-    )
-    assert tuple(img[0, 0]) == expect
-
-    # restart markers: DC predictor resets per segment
-    blocks2 = []
-    for v in (5, 250, 100, 60):
-        b = np.zeros((8, 8), dtype=int)
-        b[0, 0] = v - 128
-        blocks2.append(b)
-    payload = encode_baseline_jpeg(16, 16, [(1, 1, 1, 0, blocks2)], {0: q},
-                                   restart_interval=1)
-    img = decode_jpeg(payload)
-    exp2 = np.zeros((16, 16), dtype=np.uint8)
-    exp2[0:8, 0:8], exp2[0:8, 8:16] = 5, 250
-    exp2[8:16, 0:8], exp2[8:16, 8:16] = 100, 60
-    assert np.array_equal(img[:, :, 0], exp2)
-
-
-def test_decode_jpeg_corrupt_payloads():
-    """Corrupt/unsupported JFIF raises ValueError (never crashes or returns
-    garbage): bad SOI, truncated entropy data, missing SOF/SOS, progressive
-    SOF2, 16-bit DQT, missing restart segment."""
-    import numpy as np
-    import pytest
-
-    from polipus_spark.functions.multimodal import (
-        decode_jpeg, encode_baseline_jpeg,
-    )
-
-    q = np.full((8, 8), 8, dtype=np.int64)
-    b = np.zeros((8, 8), dtype=int)
-    b[0, 0] = 40
-    good = encode_baseline_jpeg(8, 8, [(1, 1, 1, 0, [b])], {0: q})
-    with pytest.raises(ValueError, match="SOI"):
-        decode_jpeg(b"\x00\x00" + good[2:])
-    with pytest.raises(ValueError):
-        decode_jpeg(good[:2])  # SOI only: no SOF/SOS
-    # truncate inside the entropy-coded data (cut before EOI, keep headers)
-    cut = good.index(b"\xff\xda") + 30
-    with pytest.raises(ValueError):
-        decode_jpeg(good[: min(cut, len(good) - 3)])
-    # progressive SOF2: flip the SOF0 marker byte
-    sof_at = good.index(b"\xff\xc0")
-    prog = good[:sof_at] + b"\xff\xc2" + good[sof_at + 2:]
-    with pytest.raises(ValueError, match="baseline"):
-        decode_jpeg(prog)
-    # 16-bit quant table: set Pq=1 in DQT
-    dqt_at = good.index(b"\xff\xdb")
-    bad_q = bytearray(good)
-    bad_q[dqt_at + 4] = 0x10
-    with pytest.raises(ValueError, match="quantization"):
-        decode_jpeg(bytes(bad_q))
-    # declared restart interval but no RST markers in the stream
-    dri = encode_baseline_jpeg(16, 16, [(1, 1, 1, 0, [b, b, b, b])], {0: q},
-                               restart_interval=1)
-    first_rst = min(dri.index(bytes([0xFF, 0xD0 + i]))
-                    for i in range(8) if bytes([0xFF, 0xD0 + i]) in dri)
-    with pytest.raises(ValueError):
-        decode_jpeg(dri[:first_rst] + dri[first_rst:].replace(b"\xff\xd0", b"", 1))
-
-
-def test_decode_wav_real():
-    """r4: 16-bit PCM WAV decodes for REAL — RIFF chunk walk (unknown
-    chunks skipped, word alignment), little-endian int16 view, channel
-    de-interleave — via a hand-built stereo clip."""
-    import struct
-
-    from polipus_spark.functions.multimodal import decode_wav
-
-    samples = [100, -200, 32767, -32768, 0, 7]  # L,R interleaved, 3 frames
-    data = struct.pack("<6h", *samples)
-    fmt = struct.pack("<IHHIIHH", 16, 1, 2, 8000, 32000, 4, 16)
-    # an unknown odd-sized chunk before fmt exercises skip + word alignment
-    junk = b"LIST" + struct.pack("<I", 3) + b"abc" + b"\x00"
-    payload = (b"RIFF" + struct.pack("<I", 4 + len(junk) + 8 + 16 + 8 + len(data))
-               + b"WAVE" + junk + b"fmt " + fmt
-               + b"data" + struct.pack("<I", len(data)) + data)
-    nc, rate, arr = decode_wav(payload)
-    assert (nc, rate) == (2, 8000)
-    assert arr.shape == (3, 2)
-    assert arr[:, 0].tolist() == [100, 32767, 0]
-    assert arr[:, 1].tolist() == [-200, -32768, 7]
-    with pytest.raises(ValueError, match="not a RIFF"):
-        decode_wav(b"RIFX" + payload[4:])
-    with pytest.raises(ValueError, match="truncated"):
-        decode_wav(payload[:-1])
-    float_fmt = struct.pack("<IHHIIHH", 16, 3, 2, 8000, 64000, 8, 32)
-    bad = (b"RIFF" + struct.pack("<I", 4 + 8 + 16 + 8 + len(data)) + b"WAVE"
-           + b"fmt " + float_fmt + b"data" + struct.pack("<I", len(data)) + data)
-    with pytest.raises(ValueError, match="16-bit PCM"):
-        decode_wav(bad)
-
-
-def test_decode_y4m_real():
-    """r4: YUV4MPEG2 video decodes for REAL — header tokens, FRAME markers
-    (with and without params), planar geometry per colorspace."""
-    from polipus_spark.functions.multimodal import decode_y4m
-
-    y = bytes(range(4))            # 2×2 luma
-    u, v = b"\x10\x20\x30\x40", b"\x50\x60\x70\x80"
-    # C444: full chroma planes; second FRAME carries a parameter
-    p = (b"YUV4MPEG2 W2 H2 F30000:1001 Ip A1:1 C444\n"
-         + b"FRAME\n" + y + u + v
-         + b"FRAME Xparam\n" + y[::-1] + u + v)
-    w, h, fps, frames = decode_y4m(p)
-    assert (w, h, fps) == (2, 2, (30000, 1001))
-    assert len(frames) == 2
-    assert frames[0][0].tolist() == [[0, 1], [2, 3]]
-    assert frames[1][0].tolist() == [[3, 2], [1, 0]]
-    assert frames[0][1].tolist() == [[0x10, 0x20], [0x30, 0x40]]
-    assert frames[0][2].tolist() == [[0x50, 0x60], [0x70, 0x80]]
-
-    # C420 (also the default when C is absent): quarter chroma planes
-    p420 = b"YUV4MPEG2 W2 H2 F25:1\nFRAME\n" + y + b"\xAA" + b"\xBB"
-    _, _, _, fr = decode_y4m(p420)
-    assert fr[0][0].shape == (2, 2)
-    assert fr[0][1].tolist() == [[0xAA]] and fr[0][2].tolist() == [[0xBB]]
-    # C422: half-width chroma
-    p422 = b"YUV4MPEG2 W2 H2 C422\nFRAME\n" + y + b"\x01\x02" + b"\x03\x04"
-    _, _, _, fr = decode_y4m(p422)
-    assert fr[0][1].tolist() == [[1], [2]]
-
-    with pytest.raises(ValueError, match="not a YUV4MPEG2"):
-        decode_y4m(b"RIFF" + p[4:])
-    with pytest.raises(ValueError, match="truncated Y4M header"):
-        decode_y4m(b"YUV4MPEG2 W2 H2")
-    with pytest.raises(ValueError, match="missing W or H"):
-        decode_y4m(b"YUV4MPEG2 W2\nFRAME\n" + y)
-    with pytest.raises(ValueError, match="unsupported Y4M colorspace"):
-        decode_y4m(b"YUV4MPEG2 W2 H2 Cmono\nFRAME\n" + y)
-    with pytest.raises(ValueError, match="bad Y4M header token"):
-        decode_y4m(b"YUV4MPEG2 W2 Hx\nFRAME\n" + y)
-    with pytest.raises(ValueError, match="truncated Y4M frame data"):
-        decode_y4m(p[:-1])
-    with pytest.raises(ValueError, match="bad Y4M FRAME marker"):
-        decode_y4m(b"YUV4MPEG2 W2 H2 C444\nFRAMX\n" + y + u + v)
-
-
-def test_video_stats_sampling_and_null(spark):
-    """video_stats: every_n sampling picks frames 0, n, 2n…; sums cover
-    only sampled frames; undecodable payloads yield null stats rows."""
-    from polipus_spark.functions.multimodal import video_stats
-
-    y = bytes([10, 20, 30, 40])
-    frame = b"FRAME\n" + y + b"\x01\x02\x03\x04" + b"\x05\x06\x07\x08"
-    clip = b"YUV4MPEG2 W2 H2 C444\n" + frame * 5
-    media = spark.createDataFrame(
-        [("a", bytearray(clip)), ("bad", bytearray(b"MP4 box"))],
-        "doc_id string, payload binary")
-    rows = {r["doc_id"]: r for r in video_stats(media, every_n=2).collect()}
-    a = rows["a"]
-    assert (a["width"], a["height"]) == (2, 2)
-    assert (a["n_frames"], a["n_sampled"]) == (5, 3)
-    assert a["sum_y"] == 100 * 3 and a["sum_u"] == 10 * 3 and a["sum_v"] == 26 * 3
-    assert rows["bad"]["width"] is None and rows["bad"]["sum_y"] is None
-    with pytest.raises(ValueError, match="every_n"):
-        video_stats(media, every_n=0)
-
-
-def test_audio_stats_mono_and_null(spark):
-    """audio_stats: mono leaves sum_abs_r null; undecodable payloads yield
-    all-null stats instead of killing the job; |−32768| sums in int64."""
-    import struct
-
-    from polipus_spark.functions.multimodal import audio_stats
-
-    def wav(nch, rate, samples):
-        data = struct.pack(f"<{len(samples)}h", *samples)
-        fmt = struct.pack("<IHHIIHH", 16, 1, nch, rate, rate * 2 * nch,
-                          2 * nch, 16)
-        return (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                + b"fmt " + fmt + b"data" + struct.pack("<I", len(data)) + data)
-
-    rows = [(1, wav(1, 16000, [-32768, 10])), (2, b"garbage"), (3, None)]
-    media = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in audio_stats(media).collect()}
-    assert (got[1]["n_channels"], got[1]["sample_rate"]) == (1, 16000)
-    assert got[1]["n_frames"] == 2 and got[1]["sum_abs_l"] == 32778
-    assert got[1]["sum_abs_r"] is None
-    for d in (2, 3):
-        assert got[d]["sum_abs_l"] is None and got[d]["n_channels"] is None
-
-
 def test_ivf_quantized_index(spark, tmp_path):
     """Quantized persisted IVF (r3 VERDICT #6): int8 codes + scale stored
     beside the float column; scoring scans ONLY the int8 columns (column
@@ -1528,106 +1061,6 @@ def test_clustering_coefficients_hand_cases(spark):
     got = {r["node"]: (r["deg"], r["n_tri"], r["cc_scaled"])
            for r in clustering_coefficients(path).collect()}
     assert got == {2: (2, 0, 0)}
-
-
-def test_image_dhash_and_hamming_near_pairs(spark):
-    """dHash hand-cases: a one-pixel perturbation stays within Hamming 1 of
-    its base image; a gradient image is far from a flat one; the banded
-    join (k=1) finds exactly the near pair. Also pins the bit layout:
-    bit j = y*(w-1)+x set iff gray[y,x] > gray[y,x+1]."""
-    from polipus_spark.functions.dedup import hamming_near_pairs
-    from polipus_spark.functions.multimodal import image_dhash
-
-    def ppm(raster: bytes) -> bytes:
-        return b"P6\n4 4\n255\n" + raster
-
-    flat = ppm(bytes([10, 10, 10] * 16))
-    # one pixel (3,3) brighter: only comparison (y=3, x=2) -> bit 11 differs
-    one = bytearray([10, 10, 10] * 16)
-    one[45:48] = bytes([200, 200, 200])
-    # decreasing gradient: every horizontal comparison true -> all 12 bits
-    grad = ppm(bytes(b for x in [240, 160, 80, 0] * 4 for b in (x, x, x)))
-
-    rows = [(1, flat), (2, ppm(bytes(one))), (3, grad)]
-    media = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r["dhash"]
-           for r in image_dhash(media).collect()}
-    assert got[1] == 0
-    assert got[2] == 0  # brighter RIGHT neighbour: gray[3,2] > gray[3,3] is False
-    assert got[3] == (1 << 12) - 1
-
-    # make doc 2 the one with the set bit instead (darker right neighbour)
-    two = bytearray([10, 10, 10] * 16)
-    two[45:48] = bytes([0, 0, 0])
-    media2 = spark.createDataFrame(
-        [(1, flat), (2, ppm(bytes(two))), (3, grad)],
-        "doc_id long, payload binary")
-    sigs = image_dhash(media2)
-    got2 = {r["doc_id"]: r["dhash"] for r in sigs.collect()}
-    assert got2[2] == 1 << 11  # exactly bit j = 3*(4-1)+2
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in hamming_near_pairs(
-                 sigs, n_bits=12, k=1,
-                 id_col="doc_id", hash_col="dhash").collect()}
-    assert pairs == {(1, 2): 1}
-
-    # undecodable payload -> null hash, excluded from pairing
-    bad = spark.createDataFrame(
-        [(9, b"notanimage")], "doc_id long, payload binary")
-    assert image_dhash(bad).collect()[0]["dhash"] is None
-
-
-def test_audio_fingerprint_and_near_pairs(spark):
-    """Acoustic fingerprint hand-cases: flat audio → fp 0; per-frame
-    rising loudness → all delta bits; a single loud final sample moves
-    only the last bit (Hamming 1 from flat); the banded join (k=1) finds
-    exactly the near pair. Also pins stereo channel summing, the
-    too-short guard, and the undecodable→null posture."""
-    import struct
-
-    from polipus_spark.functions.dedup import hamming_near_pairs
-    from polipus_spark.functions.multimodal import audio_fingerprint
-
-    def wav(samples, n_ch=1):
-        data = struct.pack(f"<{len(samples)}h", *samples)
-        return (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                + b"fmt " + struct.pack("<IHHIIHH", 16, 1, n_ch, 8000,
-                                        16000 * n_ch, 2 * n_ch, 16)
-                + b"data" + struct.pack("<I", len(data)) + data)
-
-    # 32 mono samples, frame_len 4 → 8 analysis frames → 7 delta bits
-    flat = [100] * 32                                  # equal energies → 0
-    rising = [(i // 4 + 1) * 10 for i in range(32)]    # every frame louder
-    near = [100] * 32
-    near[31] = 30000                                   # only last frame moves
-    media = spark.createDataFrame(
-        [(1, wav(flat)), (2, wav(near)), (3, wav(rising))],
-        "doc_id long, payload binary")
-    sigs = audio_fingerprint(media)
-    got = {r["doc_id"]: (r["afp"], r["fp_bits"]) for r in sigs.collect()}
-    assert got[1] == (0, 7)
-    assert got[2] == (1 << 6, 7)
-    assert got[3] == ((1 << 7) - 1, 7)
-
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in hamming_near_pairs(
-                 sigs, n_bits=7, k=1,
-                 id_col="doc_id", hash_col="afp").collect()}
-    assert pairs == {(1, 2): 1}
-
-    # stereo: per-PCM-frame energy sums across channels before framing
-    st = wav([1, 1, 2, 2, 3, 3, 4, 4], n_ch=2)  # 4 PCM frames, 2 channels
-    got = audio_fingerprint(
-        spark.createDataFrame([(5, st)], "doc_id long, payload binary"),
-        frame_len=2).collect()[0]
-    # analysis frames: (1+1)+(2+2)=6 vs (3+3)+(4+4)=14 → bit 0 set
-    assert (got["afp"], got["fp_bits"]) == (1, 1)
-
-    # undecodable payload and a clip too short to frame → null fp
-    bad = spark.createDataFrame(
-        [(9, b"noise"), (10, wav([5] * 4))], "doc_id long, payload binary")
-    got = {r["doc_id"]: r["afp"] for r in audio_fingerprint(bad).collect()}
-    assert got == {9: None, 10: None}
 
 
 def test_dedup_near_survivor_best(spark):
@@ -1963,61 +1396,6 @@ def test_cluster_by_zorder_partition_envelopes(spark):
     assert all(min(sa, sb) <= 32 for sa, sb, c in spans if c >= 16)
 
 
-def test_video_near_pairs_hand_case(spark):
-    """Two clips sharing 2 of 3 raw frames pair at n_common=2; a clip with
-    all-distinct frames stays out; a corrupt payload is skipped, not
-    fatal."""
-    from polipus_spark.functions.multimodal import (
-        video_frame_hashes, video_near_pairs,
-    )
-
-    def clip(frames):
-        body = b"".join(b"FRAME\n" + f for f in frames)
-        return b"YUV4MPEG2 W2 H2 F25:1 Ip A1:1 C444\n" + body
-
-    fa, fb, fc, fd = (bytes([i] * 12) for i in range(4))
-    rows = [
-        (1, clip([fa, fb, fc])),
-        (2, clip([fa, fb, fd])),
-        (3, clip([bytes([9] * 12), bytes([8] * 12), bytes([7] * 12)])),
-        (4, b"not a video"),
-    ]
-    media = spark.createDataFrame(rows, "doc_id long, payload binary")
-    hashes = video_frame_hashes(media).collect()
-    assert {r["doc_id"] for r in hashes} == {1, 2, 3}
-    assert len(hashes) == 9
-    pairs = video_near_pairs(media, min_common=2).collect()
-    assert [(r["id_a"], r["id_b"], r["n_common"]) for r in pairs] \
-        == [(1, 2, 2)]
-
-
-def test_video_near_pairs_overlapping_classes(spark):
-    """Pairs must SUM across distinct id-list classes when classes
-    overlap (the disjoint fast path must not fire): frame fa is shared
-    by clips {1,2}, fb by {1,2,3} — pair (1,2) has n_common=2 from two
-    different classes, (1,3) and (2,3) only 1."""
-    from polipus_spark.functions.multimodal import video_near_pairs
-
-    def clip(frames):
-        body = b"".join(b"FRAME\n" + f for f in frames)
-        return b"YUV4MPEG2 W2 H2 F25:1 Ip A1:1 C444\n" + body
-
-    fa, fb = bytes([1] * 12), bytes([2] * 12)
-    u = [bytes([100 + i] * 12) for i in range(3)]
-    rows = [
-        (1, clip([fa, fb, u[0]])),
-        (2, clip([fa, fb, u[1]])),
-        (3, clip([fb, u[2]])),
-    ]
-    media = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = sorted((r["id_a"], r["id_b"], r["n_common"])
-                 for r in video_near_pairs(media, min_common=1).collect())
-    assert got == [(1, 2, 2), (1, 3, 1), (2, 3, 1)]
-    got2 = sorted((r["id_a"], r["id_b"], r["n_common"])
-                  for r in video_near_pairs(media, min_common=2).collect())
-    assert got2 == [(1, 2, 2)]
-
-
 def test_mips_topk_orders_by_dot_not_cosine(spark):
     """The norm-augmentation reduction must rank by INNER PRODUCT: a
     short perfectly-aligned vector (cosine 1.0, dot 0.5) loses to a
@@ -2073,31 +1451,6 @@ def test_refresh_rollup_touches_only_batch_buckets(spark, tmp_path):
             for r in spark.read.parquet(str(tmp_path / "full")).collect()}
     assert got == want
     assert refresh_rollup(spark, out, ev([])) == []
-
-
-def test_video_scene_cuts_hand_case(spark):
-    """Shot runs [A,A,B,B,B,C] → 3 shots; frame sampling every 2 sees
-    [A,B,B] → 2 shots (sampling can only merge shots, never split);
-    single-shot and corrupt clips behave."""
-    from polipus_spark.functions.multimodal import video_scene_cuts
-
-    def clip(frames):
-        body = b"".join(b"FRAME\n" + f for f in frames)
-        return b"YUV4MPEG2 W2 H2 F25:1 Ip A1:1 C444\n" + body
-
-    fa, fb, fc = (bytes([i] * 12) for i in range(3))
-    rows = [
-        (1, clip([fa, fa, fb, fb, fb, fc])),
-        (2, clip([fa, fa, fa])),
-        (3, b"not a video"),
-    ]
-    media = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: (r["n_sampled"], r["n_shots"])
-           for r in video_scene_cuts(media).collect()}
-    assert got == {1: (6, 3), 2: (3, 1)}
-    sampled = {r["doc_id"]: (r["n_sampled"], r["n_shots"])
-               for r in video_scene_cuts(media, every_n=2).collect()}
-    assert sampled == {1: (3, 2), 2: (2, 1)}
 
 
 def test_containment_pairs_subset_detection(spark):
@@ -2473,10 +1826,10 @@ def test_epoch_allocation_quota_property_randomized(spark):
 
 def test_hamming_near_pairs_matches_bruteforce_sweep(spark):
     """Randomized (seeded) equivalence sweep for the pigeonhole banding
-    shared by SimHash text, image dHash, and the audio fingerprint:
-    banded join results == exhaustive O(n²) pair enumeration for every
-    (n_bits, k) config in use — banding must be a pure candidate
-    prefilter, never a semantics change."""
+    behind SimHash text near-dup: banded join results == exhaustive O(n²)
+    pair enumeration for narrow (12, 15-bit) and wide (60-bit)
+    fingerprints — banding must be a pure candidate prefilter, never a
+    semantics change."""
     import random
 
     from polipus_spark.functions.dedup import hamming_near_pairs

@@ -12,6 +12,8 @@ from pyspark.sql import types as T
 from polipus_spark.catalog import SnapshotCatalog
 from polipus_spark.config import CrawlOptions
 from polipus_spark.operators.frontier import Frontier
+from polipus_spark.plans.crawler import PolipusCrawler
+from polipus_spark.sources.corpus import corpus_df, gen_corpus
 
 PUSH_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -145,3 +147,42 @@ def test_push_lineage_per_bucket(spark, work_dir):
     assert sum(per_bucket.values()) == 12
     assert all(0 <= int(b) < 4 for b in per_bucket)
     out.unpersist()
+
+
+def _persisted_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_seed_and_push_leave_nothing_persisted(spark, work_dir):
+    """The seq assignment's sorted frame reaches the caller through
+    ``persisted``: ``seed()`` releases it with the appended frame, a push
+    whose returned frames the caller releases leaves no dataset cached, and
+    an empty push releases both itself. Compared by RDD id, so frames freed
+    meanwhile by the context cleaner cannot hide a new one."""
+    docs = gen_corpus(n_hosts=2, max_docs_per_host=5)
+    opts = CrawlOptions(depth_limit=2, obey_robots_txt=True)
+    crawler = PolipusCrawler(spark, corpus_df(spark, docs), opts, work_dir)
+
+    before = _persisted_ids(spark)
+    n = crawler.seed(["http://host0.example.com/", "http://host1.example.com/"],
+                     wave=0, next_seq=0)
+    assert n == 2
+    assert _persisted_ids(spark) - before == set()
+
+    before = _persisted_ids(spark)
+    held: list = []
+    n, _, out = crawler.frontier.push(
+        _urls_df(spark, [_msg(i) for i in range(8)], parent_seq=0),
+        wave=1, next_seq=n, persisted=held,
+    )
+    assert n == 8 and len(held) == 1
+    for df in [out, *held]:
+        df.unpersist()
+    assert _persisted_ids(spark) - before == set()
+
+    before = _persisted_ids(spark)
+    held = []
+    n, _, out = crawler.frontier.push(_urls_df(spark, []), wave=1, next_seq=10,
+                                      persisted=held)
+    assert (n, out, held) == (0, None, [])
+    assert _persisted_ids(spark) - before == set()

@@ -156,11 +156,6 @@ def main() -> None:
         "keyed window for the ignorenulls running last(). Grid size is "
         "the user's plotting contract (|K|·range/step), independent of "
         "raw event count.",
-        "jpeg_decode_stats": "baseline JFIF decode (r5): ONE "
-        "ArrowEvalPython/mapInPandas node per batch does encode (test "
-        "scaffolding) and decode+stats — no per-row Python, no shuffle at "
-        "all; the media path is embarrassingly parallel map work, which "
-        "is exactly what a 100 TB image corpus needs.",
         "crawl_pagerank": "PageRank over the crawl's own link graph (r5): "
         "link extraction is a posexplode+groupBy on the stored spans; "
         "each rank round is a pair of hash equi-joins plus a narrow "
@@ -209,18 +204,12 @@ def main() -> None:
         "below the exchange — each map task ships ~k rows per group.",
         "events_zorder": "Z-order key (r5): one ProjectExec of shift/mask "
         "terms fused into the scan, map-only.",
-        "dedup_video_frames": "frame-level video dedup (r5): one "
-        "mapInPandas decode (pixels never shuffle), equi-join on the "
-        "60-bit frame fingerprint, pair count-filter.",
         "sketch_distinct_by_type": "grouped HLL + merge (r5): registers "
         "aggregate map-side; the __all__ merge is a 64-row re-agg — "
         "input size never reaches an exchange.",
         "dedup_containment": "containment near-dup (r5): the shingle "
         "self-join is df-bounded (hot shingles filtered BEFORE pairing), "
         "so pair fan-out is ≤ max_df per shingle — equi-joins only.",
-        "dedup_audio_fp": "audio near-dup (r5): ONE mapInPandas "
-        "decode+fingerprint pass (waveforms never shuffle), then the "
-        "pigeonhole band equi-join over (id, 15-bit fp) rows only.",
         "tpch_q4_style": "EXISTS as LeftSemi hash join with the non-equi "
         "residual (l_shipdate > o_orderdate) on top of the orderkey "
         "equi-key; the quarter window is in the orders scan's "
