@@ -5,21 +5,15 @@ The reference fetches over HTTP with a keep-alive pool and follows up to
 keeping the final one with prior hops as ``aliases``
 (/root/reference/lib/polipus/http.rb:161-182, lib/polipus.rb:203-213).
 
-Here "the web" is the ``docs`` corpus table, so a fetch is a left join of
-the popped wave against docs on ``url == doc_id``:
-
-  * hit, code 2xx/4xx → fetched page with the doc's spans;
-  * hit, code 3xx with same-host redirect_to → follow: bounded driver loop
-    (≤ redirect_limit iterations) of re-canonicalize + re-join; each hop URL
-    accumulates into ``aliases`` (J5). Cross-host redirects are NOT followed
-    (F12, http.rb:276-278) — the 3xx page itself becomes final;
-  * miss → error page (the reference's unreachable-host case,
-    http.rb:215-222): fetched=false, error set, no spans.
-
-The loop is driver-side control flow over DataFrames — at most 5 extra
-joins per wave, each against the (bucketable, broadcastable-when-small)
-docs table; no per-row Python. ``response_time`` is a deterministic
-function of the final URL so runs are reproducible.
+Here "the web" is the ``docs`` corpus table. It does not change during a
+session, so ``redirect_map`` resolves every chain once, from its start URL.
+Cross-host redirects are NOT followed (F12, http.rb:276-278) — the 3xx page
+itself becomes final. Per wave, ``resolve_redirects`` looks each popped URL
+up in that map and ``fetch_wave`` joins docs once, on the final URL: a hit
+is a fetched page with the doc's spans; a miss is an error page (the
+reference's unreachable-host case, http.rb:215-222): fetched=false, error
+set, no spans. No per-row Python and no per-hop loop; ``response_time`` is
+a deterministic function of the final URL so runs are reproducible.
 """
 
 from __future__ import annotations
@@ -32,110 +26,88 @@ from polipus_spark.functions.urls import h60, url_host
 SIM_ERROR = "connection refused (simulated)"
 
 
-def _join_docs(
-    wave: DataFrame, docs: DataFrame, url_expr: str, broadcast_wave: bool = True
+def redirect_map(docs: DataFrame, redirect_limit: int = 5) -> DataFrame:
+    """``(_r_url, _r_final, _r_aliases)``: for each same-host 3xx doc, where
+    its chain of at most ``redirect_limit`` hops ends and the URLs it passed
+    through. One lazy plan: the redirect edges, then ``redirect_limit - 1``
+    left joins over them, each following one more hop where the current
+    final URL is itself a same-host redirect (a cycle keeps going round, as
+    the reference's bounded loop does). ``redirect_limit`` 0 maps nothing."""
+    edges = docs.where(
+        F.lit(redirect_limit > 0)
+        & F.col("code").between(300, 399)
+        & F.col("redirect_to").isNotNull()
+        # F12: follow only same-host redirects (http.rb:276-278)
+        & (url_host(F.col("redirect_to")) == url_host(F.col("doc_id")))
+    ).select(F.col("doc_id").alias("_e_src"), F.col("redirect_to").alias("_e_dst"))
+    m = edges.select(
+        F.col("_e_src").alias("_r_url"),
+        F.col("_e_dst").alias("_r_final"),
+        F.array("_e_src").alias("_r_aliases"),
+    )
+    for _ in range(redirect_limit - 1):
+        hop = F.col("_e_src").isNotNull()
+        m = m.join(edges, F.col("_r_final") == F.col("_e_src"), "left").select(
+            "_r_url",
+            F.when(hop, F.col("_e_dst")).otherwise(F.col("_r_final")).alias("_r_final"),
+            F.when(hop, F.array_append("_r_aliases", F.col("_r_final")))
+            .otherwise(F.col("_r_aliases")).alias("_r_aliases"),
+        )
+    return m
+
+
+def resolve_redirects(wave: DataFrame, redirects: DataFrame) -> DataFrame:
+    """J5 lookup: one left join of the wave to the session's
+    ``redirect_map`` adds ``final_url`` (the ``url`` itself when it starts
+    no same-host redirect) and its ``aliases`` (empty then)."""
+    return (
+        wave.join(redirects, F.col("url") == F.col("_r_url"), "left")
+        .withColumn("final_url", F.coalesce(F.col("_r_final"), F.col("url")))
+        .withColumn("aliases", F.coalesce(
+            F.col("_r_aliases"), F.array().cast("array<string>")))
+        .drop("_r_url", "_r_final", "_r_aliases")
+    )
+
+
+def fetch_wave(
+    wave: DataFrame,
+    docs: DataFrame,
+    logical_now: int = 0,
+    wave_rows: int | None = None,
+    broadcast_max_rows: int = 250_000,
 ) -> DataFrame:
+    """Input: popped frontier rows through ``resolve_redirects`` (url,
+    final_url, aliases). Output: one row per input with code, spans,
+    redirect_to, fetched, error, response_time and fetched_at added from the
+    docs row at ``final_url``.
+
+    ``wave_rows`` is the caller's known row count for the popped wave. When
+    it is known and at most ``broadcast_max_rows`` — politeness-budgeted
+    waves, the common case — the wave's final URLs are broadcast into the
+    docs scan. Wave LEFT JOIN docs would shuffle the (huge) corpus, and Spark
+    cannot broadcast the PRESERVED side of an outer join (a broadcast(wave)
+    right_outer hint is silently dropped → SortMerge), so it is decomposed:
+    a LEFT SEMI broadcast join streams the corpus once, without a shuffle,
+    and keeps the docs this wave reads (wave-sized, as the gate bounds the
+    wave); the wave then left-joins those as a shuffled hash join of two
+    wave-sized sides, so page spans never ride a broadcast. Nothing is
+    materialized. Unknown or larger waves take the plain shuffled left join
+    so an unlimited-budget multi-GB wave can never OOM the driver.
+    """
     d = docs.select(
         F.col("doc_id").alias("_d_url"),
         F.col("code").alias("_d_code"),
         F.col("spans").alias("_d_spans"),
         F.col("redirect_to").alias("_d_redirect"),
     )
-    if broadcast_wave:
-        # wave LEFT JOIN docs would shuffle the (huge) corpus every wave, and
-        # Spark cannot broadcast the PRESERVED side of an outer join (a
-        # broadcast(wave) right_outer hint is silently dropped → SortMerge,
-        # i.e. a full corpus shuffle). So decompose:
-        #   hits   = docs INNER BHJ broadcast(wave)   — corpus streams, no
-        #            shuffle (BuildRight inner is supported);
-        #   misses = wave ANTI broadcast(matched urls) — the unreachable-host
-        #            rows, with null doc columns.
-        # hits is materialized (wave-sized — the broadcast gate already
-        # bounds it) so the corpus streams ONCE per hop: without the
-        # barrier, `matched` re-ran the whole hits pass inside the
-        # anti-join's broadcast, i.e. a second corpus scan per wave
-        # (r5 review #5). On an Iceberg deployment both passes become
-        # storage-partitioned joins on bucket(doc_id).
-        hits = d.join(F.broadcast(wave), wave[url_expr] == d["_d_url"],
-                      "inner").localCheckpoint(eager=True)
-        matched = hits.select(F.col(url_expr).alias("_m_url"))
-        misses = wave.join(
-            F.broadcast(matched), wave[url_expr] == F.col("_m_url"), "left_anti"
-        )
-        for f in d.schema.fields:
-            misses = misses.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return hits.unionByName(misses)
-    # Big-wave fallback: plain left join, strategy left to AQE (sort-merge or
-    # shuffle-hash on the shuffled sides) — never a driver-sized broadcast.
-    return wave.join(d, wave[url_expr] == d["_d_url"], "left")
-
-
-def fetch_wave(
-    wave: DataFrame,
-    docs: DataFrame,
-    redirect_limit: int = 5,
-    logical_now: int = 0,
-    wave_rows: int | None = None,
-    broadcast_max_rows: int = 250_000,
-    persisted: list | None = None,
-) -> DataFrame:
-    """Input: popped frontier rows (incl. url). Output: one row per input with
-    final_url, code, spans, redirect_to, aliases, fetched, error,
-    response_time, fetched_at.
-
-    ``wave_rows`` is the caller's known row count for the popped wave (the
-    crawler already counts it for metrics). The wave is broadcast only when
-    that count is known and at most ``broadcast_max_rows`` — politeness-
-    budgeted waves, the common case. Unknown or larger waves take the plain
-    shuffled left join so an unlimited-budget multi-GB wave can never OOM the
-    driver. Redirect hops follow the same decision: a hop set is a subset of
-    the wave, so if the wave was broadcastable the hops are too.
-
-    Each hop frame (wave-sized) is ``localCheckpoint``-ed: the broadcast
-    decomposition references the wave/hits subtrees several times per hop,
-    so without truncation the LOGICAL plan grows ~3^hops (round-1's single
-    join already grew 2^hops) — large enough to OOM the driver on plan
-    stringification alone. Checkpointing materializes the hop (wave-sized,
-    cheap) and cuts the lineage, which is the standard Spark pattern for
-    iterative driver loops. Handles are appended to ``persisted`` for the
-    caller to release once the final result is materialized.
-    """
-    keep = persisted if persisted is not None else []
-    bcast = wave_rows is not None and wave_rows <= broadcast_max_rows
-    cur = (
-        _join_docs(wave, docs, "url", broadcast_wave=bcast)
-        .withColumn("final_url", F.col("url"))
-        .withColumn("aliases", F.array().cast("array<string>"))
-        .withColumn("_hops", F.lit(0))
-    )
-
-    for _ in range(redirect_limit):
-        cur = cur.localCheckpoint(eager=True)
-        keep.append(cur)
-        is_redirect = (
-            F.col("_d_code").isNotNull()
-            & F.col("_d_code").between(300, 399)
-            & F.col("_d_redirect").isNotNull()
-            # F12: follow only same-host redirects (http.rb:276-278)
-            & (url_host(F.col("_d_redirect")) == url_host(F.col("final_url")))
-        )
-        to_follow = cur.where(is_redirect)
-        done = cur.where(~is_redirect)
-        if to_follow.isEmpty():
-            cur = done
-            break
-        followed = (
-            to_follow.withColumn("aliases", F.array_append("aliases", F.col("final_url")))
-            .withColumn("final_url", F.col("_d_redirect"))
-            .withColumn("_hops", F.col("_hops") + 1)
-            .drop("_d_url", "_d_code", "_d_spans", "_d_redirect")
-        )
-        followed = _join_docs(followed, docs, "final_url", broadcast_wave=bcast)
-        cur = done.unionByName(followed)
-
+    if wave_rows is not None and wave_rows <= broadcast_max_rows:
+        urls = wave.select(F.col("final_url").alias("_w_url"))
+        d = d.join(F.broadcast(urls), F.col("_d_url") == F.col("_w_url"),
+                   "left_semi").hint("shuffle_hash")
     fetched = F.col("_d_url").isNotNull()
     return (
-        cur.withColumn("fetched", fetched)
+        wave.join(d, F.col("final_url") == F.col("_d_url"), "left")
+        .withColumn("fetched", fetched)
         .withColumn("code", F.col("_d_code"))
         .withColumn("spans", F.col("_d_spans"))
         .withColumn("redirect_to", F.col("_d_redirect"))
@@ -144,5 +116,5 @@ def fetch_wave(
             "response_time", F.pmod(h60(F.col("final_url")), F.lit(1000)).cast("int")
         )
         .withColumn("fetched_at", F.lit(logical_now).cast("bigint"))
-        .drop("_d_url", "_d_code", "_d_spans", "_d_redirect", "_hops")
+        .drop("_d_url", "_d_code", "_d_spans", "_d_redirect")
     )

@@ -41,7 +41,9 @@ from polipus_spark.config import CrawlOptions
 from polipus_spark.functions.links import extract_links
 from polipus_spark.functions.robots import crawl_delays_df, robots_rules_df
 from polipus_spark.functions.urls import canonicalize_pd, url_uuid
-from polipus_spark.operators.fetch import fetch_wave
+from polipus_spark.operators.fetch import (
+    fetch_wave, redirect_map, resolve_redirects,
+)
 from polipus_spark.operators.frontier import Frontier, ORDER_COLS
 from polipus_spark.operators.tracker import make_tracker
 
@@ -61,6 +63,12 @@ def _path_col(url) -> F.Column:
     return F.when(p == "", "/").otherwise(p)
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free a ``localCheckpoint``-ed frame's blocks now; the JVM alone frees
+    them only when it garbage-collects the RDD."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 class PolipusCrawler:
     """Drop-in analog of the reference crawler over a docs corpus table."""
 
@@ -75,6 +83,10 @@ class PolipusCrawler:
         self.spark = spark
         self.docs = docs
         self.opts = opts
+        # J5: docs do not change during a session, so every redirect chain
+        # is resolved once here; counted so the planner knows its size
+        self.redirects = redirect_map(docs, opts.redirect_limit).persist()
+        self.redirects.count()
         self.catalog = SnapshotCatalog(spark, work_dir)
         self.frontier = Frontier(self.catalog, opts)
         self.tracker = self._make_tracker()
@@ -357,8 +369,9 @@ class PolipusCrawler:
         # plugin hook: message batch received (lib/polipus.rb:182)
         popped = self._run_frame_hook("on_message_received", popped, persisted=True)
 
-        # F7 dequeue-time revalidation (tracker-less, lib/polipus.rb:186-190)
-        valid = self._policy_filter(popped, "url")
+        # F7 dequeue-time revalidation (tracker-less, lib/polipus.rb:186-190),
+        # then J5: each URL's redirect chain, looked up in the session's map
+        valid = resolve_redirects(self._policy_filter(popped, "url"), self.redirects)
 
         # F8 page_exists?: stored && !expired && !seeded ⇒ skip
         # (lib/polipus.rb:192-196, 413-416)
@@ -397,13 +410,11 @@ class PolipusCrawler:
         # plugin hook: about to fetch (lib/polipus.rb:201)
         valid_live = self._run_frame_hook("on_before_download", valid_live)
 
-        # S4/J5 fetch + redirects
-        hop_frames: list = []
+        # S4 fetch: one docs join on the final URLs resolved above
         fetched = fetch_wave(
-            valid_live, self.docs, o.redirect_limit, logical_now=now,
+            valid_live, self.docs, logical_now=now,
             wave_rows=n_valid,
             broadcast_max_rows=o.broadcast_wave_max_rows,
-            persisted=hop_frames,
         )
         fetched = fetched.withColumn(
             "final_uuid", url_uuid(F.col("final_url"), o.include_query_string_in_uuid)
@@ -465,8 +476,14 @@ class PolipusCrawler:
             is_expandable = is_expandable & (F.col("depth") < F.lit(o.depth_limit))
 
         # Metric action 2 of 2: every post-fetch counter in ONE agg over the
-        # persisted fetch result (was ~6 separate jobs).
-        fetched = fetched.persist()
+        # materialized fetch result (was ~6 separate jobs). A local checkpoint,
+        # not a cache: the wave's later plans (links, push, tracker, appends)
+        # read it as a leaf, where a cached frame prints its whole upstream
+        # plan (pop, robots, redirect map) inside each of theirs: a frontier
+        # append's plan string grew from 0.2 MB to 8 MB, waves slowed and
+        # the event log ran out of heap. Released at the end of the wave,
+        # not left to the JVM's garbage collector.
+        fetched = fetched.localCheckpoint(eager=False)
         cnt = lambda c: F.sum(c.cast("long"))  # noqa: E731
         post = fetched.agg(
             cnt(F.col("_exists2")).alias("redirect_dupes"),
@@ -662,9 +679,7 @@ class PolipusCrawler:
         m["next_seq"] = new_next_seq
         # plugin hook: wave fully processed (lib/polipus.rb:250)
         self._execute_plugin("on_message_processed", m)
-        fetched.unpersist()
-        for hf in hop_frames:  # redirect hop intermediates (fetch_wave)
-            hf.unpersist()
+        _release_checkpoint(fetched)
         valid.unpersist()
         popped.unpersist()
         for pf in pop_frames:  # top-k selection intermediates (frontier.pop)

@@ -60,13 +60,38 @@ def test_depth1_session(spark, work_dir):
     assert_parity(sim, crawler)
 
 
-def test_full_crawl_with_redirects(spark, work_dir):
-    """Unbounded depth, redirect chains, cross-host redirect, 404s."""
-    docs = gen_corpus(n_hosts=4, max_docs_per_host=8, with_redirect_chain=True)
-    seeds = SEEDS + ["http://host0.example.com/moved", "http://host0.example.com/chain/0"]
-    opts = CrawlOptions(max_waves=20)
+def _redirect(doc_id: str, to: str, code: int = 301) -> dict:
+    host = doc_id.split("/")[2]
+    return {"doc_id": doc_id, "spans": [], "host": host, "code": code,
+            "redirect_to": to}
+
+
+@pytest.mark.parametrize("redirect_limit", [0, 1, 5])
+def test_full_crawl_with_redirects(spark, work_dir, redirect_limit):
+    """Unbounded depth, redirect chains, cross-host redirect, 404s; plus a
+    two-doc cycle, a chain ending at a missing doc and a same-host chain
+    with a cross-host hop in the middle, under each redirect limit."""
+    h0, h1 = "http://host0.example.com", "http://host1.example.com"
+    docs = gen_corpus(n_hosts=4, max_docs_per_host=8, with_redirect_chain=True) + [
+        _redirect(f"{h0}/cycle/a", f"{h0}/cycle/b"),
+        _redirect(f"{h0}/cycle/b", f"{h0}/cycle/a", code=302),
+        _redirect(f"{h0}/dead/0", f"{h0}/dead/1"),
+        _redirect(f"{h0}/dead/1", f"{h0}/dead/gone"),
+        _redirect(f"{h0}/mixed/0", f"{h0}/mixed/1"),
+        _redirect(f"{h0}/mixed/1", f"{h1}/mixed/2"),
+        _redirect(f"{h1}/mixed/2", f"{h1}/mixed/3", code=307),
+        _redirect(f"{h1}/mixed/3", f"{h1}/"),
+    ]
+    seeds = SEEDS + [f"{h0}/moved", f"{h0}/chain/0", f"{h0}/cycle/a",
+                     f"{h0}/dead/0", f"{h0}/mixed/0", f"{h1}/mixed/2"]
+    opts = CrawlOptions(max_waves=20, redirect_limit=redirect_limit)
     sim, crawler = run_both(spark, work_dir, docs, opts, seeds)
     assert_parity(sim, crawler)
+    if redirect_limit == 5:  # a cycle keeps going round until the limit
+        page = next(p for p in sim.pages.values()
+                    if p.requested_url == f"{h0}/cycle/a")
+        assert page.url == f"{h0}/cycle/b"
+        assert page.aliases == [f"{h0}/cycle/{c}" for c in "ababa"]
 
 
 def test_skip_links_like(spark, work_dir):

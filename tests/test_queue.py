@@ -6,6 +6,7 @@ specs fix: FIFO order, drop-oldest caps, uniqueness, politeness budgets.
 """
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -186,3 +187,22 @@ def test_seed_and_push_leave_nothing_persisted(spark, work_dir):
                                       persisted=held)
     assert (n, out, held) == (0, None, [])
     assert _persisted_ids(spark) - before == set()
+
+
+@pytest.mark.parametrize("tracker_mode", ["exact", "bloom"])
+def test_waves_keep_persisted_rdds_flat(spark, work_dir, tracker_mode):
+    """Long sessions run in flat memory: waves 2 and 3 leave no persisted
+    RDD that wave 1 did not already hold (the session's redirect map, robots
+    rules and budgets). Compared by RDD id, as above."""
+    docs = gen_corpus(n_hosts=3, max_docs_per_host=6)
+    opts = CrawlOptions(depth_limit=3, obey_robots_txt=True, max_waves=1,
+                        tracker_mode=tracker_mode)
+    crawler = PolipusCrawler(spark, corpus_df(spark, docs), opts, work_dir)
+    crawler.takeover(["http://host0.example.com/", "http://host0.example.com/chain/0",
+                      "http://host1.example.com/"])
+    after_one = _persisted_ids(spark)
+    crawler.takeover(resume=True)
+    crawler.takeover(resume=True)
+    scheduled = [r["scheduled"] for r in crawler.metrics.read().orderBy("wave").collect()]
+    assert len(scheduled) == 3 and min(scheduled) > 0
+    assert _persisted_ids(spark) - after_one == set()

@@ -26,6 +26,48 @@ def grab_plan(df) -> str:
     return buf.getvalue()
 
 
+def fetch_sections(spark, docs) -> list[tuple[str, str, str]]:
+    """The fetch: a wave (small) against docs (huge), after the redirect
+    lookup. The wave's final URLs are broadcast into the docs scan; a
+    broadcast(wave) right_outer hint would be SILENTLY UNSUPPORTED (Spark
+    cannot broadcast the preserved side of an outer join)."""
+    from pyspark.sql import functions as F
+
+    from polipus_spark.operators.fetch import (
+        fetch_wave, redirect_map, resolve_redirects,
+    )
+
+    redirects = redirect_map(docs, redirect_limit=2).persist()
+    redirects.count()
+    wave = resolve_redirects(docs.limit(5).select(
+        F.col("doc_id").alias("url"), F.lit(0).alias("depth"), F.lit(0).alias("seq"),
+        F.lit(False).alias("is_seed"),
+    ), redirects).persist()  # the crawler's pre-fetch frame is persisted
+    wave.count()
+    return [
+        (
+            "fetch_wave (S4/J5) — broadcast path",
+            "one docs join whatever the chain length. The wave arrives "
+            "persisted with its redirect lookup done (one BroadcastHashJoin "
+            "LeftOuter against the redirect map, resolved once per crawler "
+            "and shown inside the cached wave). The corpus Scan appears once: "
+            "a BroadcastHashJoin LeftSemi against the wave's final URLs, so "
+            "it is read once and never shuffled; the wave then joins those "
+            "wave-sized docs rows in a ShuffledHashJoin LeftOuter. Nothing is "
+            "checkpointed or cached by the fetch.",
+            grab_plan(fetch_wave(wave, docs, wave_rows=5,
+                                 broadcast_max_rows=250_000)),
+        ),
+        (
+            "fetch_wave (S4/J5) — big-wave fallback",
+            "waves above broadcast_wave_max_rows take the same map lookup, "
+            "then a plain shuffled left join under AQE — bounded memory, no "
+            "driver-sized broadcast.",
+            grab_plan(fetch_wave(wave, docs, wave_rows=None)),
+        ),
+    ]
+
+
 def main() -> None:
     import __spark_entry__ as entrymod
     from pyspark.sql import functions as F
@@ -270,33 +312,10 @@ def main() -> None:
         else:
             sections.append((name, note, grab_plan(qs[name](spark, SF))))
 
-    # the fetch join: wave (small) vs docs (huge) — broadcast the wave side.
-    # NB a broadcast(wave) right_outer hint is SILENTLY UNSUPPORTED (Spark
-    # cannot broadcast the preserved side of an outer join), so the join is
-    # decomposed: docs INNER BHJ broadcast(wave) + wave ANTI broadcast(matched)
-    from polipus_spark.operators.fetch import fetch_wave
     from polipus_spark.sources.corpus import corpus_df, gen_corpus
 
     docs = corpus_df(spark, gen_corpus(n_hosts=3, max_docs_per_host=5))
-    wave = docs.limit(5).select(
-        F.col("doc_id").alias("url"), F.lit(0).alias("depth"), F.lit(0).alias("seq"),
-        F.lit(False).alias("is_seed"),
-    )
-    sections.append((
-        "fetch_wave (S4/J5) — broadcast path",
-        "the popped wave is broadcast via inner-BHJ + anti-BHJ decomposition "
-        "(every join BroadcastHashJoin; the corpus is never shuffled per "
-        "wave). Redirect hops are localCheckpoint-ed, so the per-wave plan "
-        "stays shallow.",
-        grab_plan(fetch_wave(wave, docs, redirect_limit=2,
-                             wave_rows=5, broadcast_max_rows=250_000)),
-    ))
-    sections.append((
-        "fetch_wave (S4/J5) — big-wave fallback",
-        "waves above broadcast_wave_max_rows take a plain shuffled left join "
-        "under AQE — bounded memory, no driver-sized broadcast.",
-        grab_plan(fetch_wave(wave, docs, redirect_limit=2, wave_rows=None)),
-    ))
+    sections += fetch_sections(spark, docs)
 
     # robots gate: one broadcast left_anti join, regexp_like per rule row
     from polipus_spark.functions.robots import (
