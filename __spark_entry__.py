@@ -2858,10 +2858,13 @@ def q_j1_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     false positives. The oracle replays the identical double-hash bit
     arithmetic in SQL — h1/h2 from md5 hex, bucket = h1 % 32, position_i
     = (h1//32 + i·h2) mod m_bucket (all < 2^63, so BIGINT math equals
-    the numpy uint64 path), membership = every probe position present in
-    the marked-bit set of the SAME bucket. Previously spec+FPR-bound
-    pinned; this row pins the exact bitmaps the north rule's URL-seen
-    tracker computes."""
+    the tracker's decimal Column positions), membership = every probe
+    position present in the marked-bit set of the SAME bucket. The
+    tracker writes those bits as (bucket, chunk) rows with
+    bitmap_construct_agg and probes the OR'ed chunk map; the oracle never
+    sees chunks, so it also checks the chunk layout. Previously
+    spec+FPR-bound pinned; this row pins the exact bitmaps the north
+    rule's URL-seen tracker computes."""
     import shutil
 
     from polipus_spark.catalog import SnapshotCatalog
@@ -3208,7 +3211,7 @@ def _j1_bloom_probe_oracle_sql() -> str:
     """Oracle for j1_bloom_probe: the double-hash Bloom bit arithmetic
     replayed in pure SQL (see q_j1_bloom_probe for the layout argument;
     every intermediate fits BIGINT, so DuckDB integer math equals the
-    tracker's numpy uint64 path)."""
+    tracker's decimal position expression)."""
     m_bucket, k = _bloom_params(capacity=2048, error_rate=0.01, n_buckets=32)
     return f"""
       WITH d AS (

@@ -134,29 +134,6 @@ class SnapshotTable:
         self._commit_manifest(manifest)
         return version
 
-    def compact(
-        self,
-        key_cols: list[str],
-        order_extra: list[str] | None = None,
-        wave: int | None = None,
-    ) -> None:
-        """Rewrite the append log as its resolved merge-on-read view — ONE
-        snapshot, one row per key. Without this, ``read_latest_by`` windows
-        over every append ever made: after W waves the per-wave MoR
-        resolution shuffles W appends' worth of rows (Iceberg analog:
-        ``rewrite_data_files`` + snapshot expiry).
-
-        Call only at a wave commit point and pass that ``wave``: the single
-        compacted snapshot carries it, so ``rollback`` to any committed wave
-        keeps the compacted state while still dropping any later
-        uncommitted snapshots."""
-        if not self.exists():
-            return
-        self.overwrite(
-            self.read_latest_by(key_cols, order_extra=order_extra),
-            op="compact", wave=wave,
-        )
-
     def vacuum(self) -> None:
         """Delete snapshot dirs no longer referenced by the manifest
         (orphans from compaction/overwrite/rollback). Only safe when no live

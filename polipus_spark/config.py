@@ -38,7 +38,7 @@ class CrawlOptions:
                                          # (~tens of MB); bigger waves fall back to
                                          # a plain left join under AQE so an
                                          # unlimited-budget wave can't OOM the driver
-    tracker_mode: str = "exact"  # 'exact' | 'bloom' | 'cuckoo' (url_tracker.rb:4-19)
+    tracker_mode: str = "exact"  # 'exact' | 'bloom' (url_tracker.rb:4-19)
     bloom_capacity: int = 1_000_000   # url_tracker.rb:6
     bloom_error_rate: float = 0.01    # url_tracker.rb:7
     compact_every_waves: int | None = 8  # every K committed waves, rewrite the

@@ -161,8 +161,6 @@ class PolipusCrawler:
         if o.tracker_mode == "bloom":
             kw = dict(capacity=o.bloom_capacity, error_rate=o.bloom_error_rate,
                       n_buckets=o.n_buckets)
-        elif o.tracker_mode == "cuckoo":
-            kw = dict(capacity=o.bloom_capacity, n_buckets=o.n_buckets)
         return make_tracker(self.catalog, o.tracker_mode, **kw)
 
     # ------------------------------------------------------------ lifecycle
@@ -176,10 +174,9 @@ class PolipusCrawler:
         commit point). Iceberg analog: rollback_to_snapshot on each table."""
         for t in (
             self.frontier.table, self.frontier.scheduled, self.pages,
-            self.fetch_log,
-            self.tracker.table if hasattr(self.tracker, "table") else None,
+            self.fetch_log, self.tracker.table,
         ):
-            if t is None or not t.exists():
+            if not t.exists():
                 continue
             keep = 0
             for s in t.lineage():
@@ -763,22 +760,20 @@ class PolipusCrawler:
     def _compact(self, wave: int) -> None:
         """Keep MoR resolution flat on long crawls: every K committed waves,
         rewrite each grow-forever log as its resolved view (pages → latest
-        per uuid minus remove-tombstones, tracker → live keys / newest
-        bitmaps, frontier → pending rows only) and vacuum orphaned snapshot
-        dirs. fetch_log and metrics are append-only journals and are never
-        compacted."""
+        per uuid minus remove-tombstones, tracker → live keys / OR'ed
+        bitmap chunks, frontier → pending rows only) and vacuum orphaned
+        snapshot dirs. fetch_log and metrics are append-only journals and
+        are never compacted."""
         if self.pages.exists():
             live = self.pages.read_latest_by(["uuid"], order_extra=["wave", "seq"])
             if "_deleted" in live.columns:
                 live = live.where(~F.coalesce(F.col("_deleted"), F.lit(False)))
             self.pages.overwrite(live, op="compact", wave=wave)
-        if hasattr(self.tracker, "compact"):
-            self.tracker.compact(wave=wave)
+        self.tracker.compact(wave=wave)
         self.frontier.compact(wave=wave)
         for t in (self.pages, self.frontier.table, self.frontier.scheduled,
-                  getattr(self.tracker, "table", None)):
-            if t is not None:
-                t.vacuum()
+                  self.tracker.table):
+            t.vacuum()
 
     # -------------------------------------------------------------- results
     def pages_df(self) -> DataFrame | None:

@@ -28,7 +28,7 @@ def main() -> None:
     p.add_argument("--depth-limit", type=int, default=None)
     p.add_argument("--max-waves", type=int, default=None)
     p.add_argument("--obey-robots", action="store_true")
-    p.add_argument("--tracker", default="exact", choices=["exact", "bloom", "cuckoo"])
+    p.add_argument("--tracker", default="exact", choices=["exact", "bloom"])
     p.add_argument("--per-host-budget", type=int, default=None)
     p.add_argument("--salt-factor", type=int, default=1)
     p.add_argument("--n-buckets", type=int, default=32)

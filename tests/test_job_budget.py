@@ -20,20 +20,22 @@ from polipus_spark.config import CrawlOptions
 from polipus_spark.plans.crawler import PolipusCrawler
 from polipus_spark.sources.corpus import corpus_df, gen_corpus
 
-# Measured 46 on a link-expanding wave over the redirect-chain corpus
-# (wave 0: pop + revalidate with the redirect-map lookup + fetch as one docs
-# join — a broadcast semi-join and a shuffled hash join, whatever the chain
-# length — store + extract + push + tracker).
+# Measured 46 (exact tracker) and 47 (Bloom tracker) on a link-expanding wave
+# over the redirect-chain corpus (wave 0: pop + revalidate with the
+# redirect-map lookup + fetch as one docs join — a broadcast semi-join and a
+# shuffled hash join, whatever the chain length — store + extract + push +
+# tracker).
 # Budget = measured + 7 slack; the point is catching MULTIPLICATIVE creep
 # (per-row/per-link/per-hop actions), not byte-exact pinning: jobs never
 # scale with row count, and no longer with redirect_limit either.
 WAVE_JOB_BUDGET = 53
 
 
-@pytest.fixture(scope="module")
-def crawler(spark):
+@pytest.fixture(scope="module", params=["exact", "bloom"])
+def crawler(spark, request):
     docs = gen_corpus(n_hosts=2, max_docs_per_host=5)
-    opts = CrawlOptions(depth_limit=2, obey_robots_txt=True, max_waves=4)
+    opts = CrawlOptions(depth_limit=2, obey_robots_txt=True, max_waves=4,
+                        tracker_mode=request.param)
     return PolipusCrawler(
         spark, corpus_df(spark, docs), opts, tempfile.mkdtemp(prefix="jobbudget_")
     )
@@ -43,12 +45,13 @@ def test_wave_job_count_bounded(spark, crawler):
     sc = spark.sparkContext
     n = crawler.seed(["http://host0.example.com/", "http://host1.example.com/"],
                      wave=0, next_seq=0)
-    sc.setJobGroup("wave_budget_probe", "job-count regression gate")
+    group = f"wave_budget_probe_{crawler.opts.tracker_mode}"  # one group per run
+    sc.setJobGroup(group, "job-count regression gate")
     try:
         m = crawler.process_wave(0, next_seq=n)
     finally:
         sc.setJobGroup(None, None)
-    jobs = sc.statusTracker().getJobIdsForGroup("wave_budget_probe")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert m["fetched"] > 0 and m["enqueued"] > 0  # a real, link-expanding wave
     assert len(jobs) <= WAVE_JOB_BUDGET, (
         f"wave used {len(jobs)} Spark jobs (budget {WAVE_JOB_BUDGET}) — "

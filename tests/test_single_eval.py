@@ -1,7 +1,7 @@
 """A wave's link frame is evaluated once on its way to the frontier: the
 robots gate and the Bloom probe each read their input a single time and add
 no Python stage of their own, so the link-canonicalisation UDF upstream of
-them runs exactly once."""
+them runs exactly once. The Bloom insert adds no Python stage either."""
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -45,3 +45,15 @@ def test_gate_and_probe_evaluate_the_link_udf_once(spark, work_dir):
     assert "BatchEvalPython" not in plan, plan
     # '*' disallows /login: the gate sees the canonical (lower-cased) url
     assert sorted(out.groupBy("_seen").count().collect()) == [(False, 35), (True, 10)]
+
+
+def test_bloom_mark_plans_no_python_stage(spark, work_dir):
+    tracker = BloomTracker(SnapshotCatalog(spark, work_dir), capacity=10_000, n_buckets=4)
+    keys = spark.createDataFrame([(f"http://{HOST}/p/{i}",) for i in range(20)], "url string")
+    tracker.mark_seen(keys, "url")  # a committed table, as in every wave after the first
+    appended = []
+    tracker.table.append = lambda df, **kw: appended.append(df)
+    tracker.mark_seen(keys, "url")
+    plan = appended[0]._jdf.queryExecution().executedPlan().toString()
+    for node in ("FlatMapCoGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan

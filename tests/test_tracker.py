@@ -1,28 +1,53 @@
-"""J1-J4 — url_tracker_spec.rb ports for all three tracker modes,
-plus Bloom FPR bound and cuckoo delete semantics."""
+"""J1-J4 — url_tracker_spec.rb ports for both tracker modes, plus the
+Bloom FPR bound, its chunk-row storage and exact-tracker remove semantics."""
 
+import hashlib
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from polipus_spark.catalog import SnapshotCatalog
-from polipus_spark.operators.tracker import (
-    BloomTracker,
-    CuckooTracker,
-    ExactTracker,
-    make_tracker,
-)
+from polipus_spark.operators.tracker import BloomTracker, ExactTracker, make_tracker
 
 URL = "http://www.asd.com/"
 OTHER = "http://www.google.com/"
+CHUNK_BYTES = 4096  # one Bloom chunk row: 32,768 bits
 
 
-@pytest.mark.parametrize("mode", ["exact", "bloom", "cuckoo"])
+def _hashes(key):
+    hx = hashlib.md5(key.encode()).hexdigest()
+    return int(hx[:15], 16), int(hx[15:30], 16)
+
+
+def _bloom_positions(h1, h2, n_buckets, m_bucket, k):
+    """Independent numpy oracle of the Bloom bit layout: (byte_idx,
+    bit_mask) arrays of shape (n_keys, k) into a bucket's whole bitmap,
+    pos_i = ((h1//b + i·h2) mod 2^64) mod m_bucket in uint64."""
+    h1d = h1.astype(np.uint64) // np.uint64(n_buckets)
+    ks = np.arange(k, dtype=np.uint64)[None, :]
+    pos = (h1d[:, None] + ks * h2.astype(np.uint64)[:, None]) % np.uint64(m_bucket)
+    return (pos >> np.uint64(3)).astype(np.int64), (
+        np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)
+    )
+
+
+def _bucket_bitmaps(t):
+    """{bucket: whole bitmap bytes}, assembled from the OR'ed chunk rows."""
+    n_chunks = -(-t.m_bucket // (8 * CHUNK_BYTES))
+    out = {}
+    for r in t._chunks().collect():
+        bm = out.setdefault(r["bucket"], bytearray(n_chunks * CHUNK_BYTES))
+        start = r["chunk"] * CHUNK_BYTES
+        bm[start:start + CHUNK_BYTES] = bytes(r["bits"])
+    return {b: bytes(bm[:t.m_bucket // 8]) for b, bm in out.items()}
+
+
+@pytest.mark.parametrize("mode", ["exact", "bloom"])
 def test_visit_then_visited(spark, work_dir, mode):
     """url_tracker_spec.rb:16-28: visit → visited? true; unseen → false."""
     cat = SnapshotCatalog(spark, work_dir)
-    kw = {"capacity": 10_000, "n_buckets": 4} if mode != "exact" else {}
-    if mode == "bloom":
-        kw["error_rate"] = 0.01
+    kw = {"capacity": 10_000, "n_buckets": 4, "error_rate": 0.01} if mode == "bloom" else {}
     t = make_tracker(cat, mode, **kw)
     assert not t.is_visited(spark, URL)
     t.visit(spark, URL)
@@ -38,18 +63,6 @@ def test_exact_remove(spark, work_dir):
     assert not t.is_visited(spark, URL)
     t.visit(spark, URL)  # re-add after remove works
     assert t.is_visited(spark, URL)
-
-
-def test_cuckoo_remove(spark, work_dir):
-    """J3: deletable tracker (reference bloom exposes remove,
-    bloomfilter.rb:18-20; plain Bloom can't — cuckoo can)."""
-    cat = SnapshotCatalog(spark, work_dir)
-    t = CuckooTracker(cat, capacity=10_000, n_buckets=4)
-    t.visit(spark, URL)
-    t.visit(spark, OTHER)
-    t.remove(spark, URL)
-    assert not t.is_visited(spark, URL)
-    assert t.is_visited(spark, OTHER)
 
 
 def test_bloom_no_false_negatives_and_fpr_bound(spark, work_dir):
@@ -135,35 +148,29 @@ def test_bloom_probe_matches_numpy_positions(spark, work_dir, capacity,
     committed bitmaps: marked keys, unmarked keys (some of them false
     positives, from one deliberately dense bucket) and a bucket with no
     bitmap row. At k = 23, i·h2 passes 2^64 and the positions wrap."""
-    import hashlib
-
-    import numpy as np
-
-    from polipus_spark.operators.tracker import _bloom_positions
-
-    def hashes(key):
-        hx = hashlib.md5(key.encode()).hexdigest()
-        return int(hx[:15], 16), int(hx[15:30], 16)
-
     t = BloomTracker(SnapshotCatalog(spark, work_dir), capacity=capacity,
                      error_rate=error_rate, n_buckets=n_buckets)
     assert t.k == k
     keys = [f"http://h{i % 17}.example/p/{i}?q={i % 5}" for i in range(6000)]
-    h1, h2 = np.array([hashes(u) for u in keys], dtype=np.int64).T
+    h1, h2 = np.array([_hashes(u) for u in keys], dtype=np.int64).T
     bucket = h1 % n_buckets
     empty_bucket, dense_bucket = 0, 1
     marked = [u for i, (u, b) in enumerate(zip(keys, bucket))
               if b != empty_bucket and i % 3 == 0]
     t.mark_seen(spark.createDataFrame([(u,) for u in marked], "key string"), "key")
     # OR dense random bits into one bucket so unmarked keys hit false positives
-    current = {r["bucket"]: bytes(r["bitmap"]) for r in t._current_bitmaps().collect()}
+    current = _bucket_bitmaps(t)
     density = 0.5 ** (1.0 / k)  # P(false positive) = density^k = 1/2
     rng = np.random.default_rng(7)
     noise = np.packbits(rng.random(t.m_bucket) < density, bitorder="little")
-    dense = np.frombuffer(current[dense_bucket], dtype=np.uint8) | noise
-    t.table.append(spark.createDataFrame([(dense_bucket, dense.tobytes())],
-                                         "bucket int, bitmap binary"), op="bloom_or")
-    current[dense_bucket] = dense.tobytes()
+    noise_rows = [(dense_bucket, c, noise[c * CHUNK_BYTES:(c + 1) * CHUNK_BYTES].tobytes()
+                   .ljust(CHUNK_BYTES, b"\0"))
+                  for c in range(-(-len(noise) // CHUNK_BYTES))]
+    t.table.append(spark.createDataFrame(noise_rows, "bucket int, chunk bigint, bits binary"),
+                   op="bloom_or")
+    current[dense_bucket] = (np.frombuffer(current[dense_bucket], dtype=np.uint8)
+                             | noise).tobytes()
+    assert _bucket_bitmaps(t) == current
     assert empty_bucket not in current
 
     got = {r["key"]: r["_seen"] for r in t.probe(
@@ -183,3 +190,60 @@ def test_bloom_probe_matches_numpy_positions(spark, work_dir, capacity,
     assert not any(want[u] for u, b in zip(keys, bucket) if b == empty_bucket)
     wraps = (h1 // n_buckets).astype(object) + (k - 1) * h2.astype(object) >= 2**64
     assert wraps.any() == (k == 23)
+
+
+def test_bloom_chunk_marks_compact_to_the_union(spark, work_dir):
+    """Three marks with a compaction between the second and the third give
+    the same verdicts (false positives included) as one mark of their
+    union; the last compaction leaves one snapshot."""
+    kw = dict(capacity=300, error_rate=0.05, n_buckets=2)
+    keys = [f"http://h{i % 7}.example/p/{i}" for i in range(900)]
+    batches = [keys[0:100], keys[100:200], keys[200:300]]
+    mk = lambda urls: spark.createDataFrame([(u,) for u in urls], "key string")  # noqa: E731
+    split = BloomTracker(SnapshotCatalog(spark, f"{work_dir}/split"), **kw)
+    union = BloomTracker(SnapshotCatalog(spark, f"{work_dir}/union"), **kw)
+    split.mark_seen(mk(batches[0]), "key")
+    split.mark_seen(mk(batches[1]), "key")
+    split.compact()
+    split.mark_seen(mk(batches[2]), "key")
+    union.mark_seen(mk(keys[:300]), "key")
+
+    def verdicts(t):
+        return {r["key"]: r["_seen"] for r in t.probe(mk(keys), "key").collect()}
+
+    want = verdicts(union)
+    assert all(want[u] for u in keys[:300])
+    assert any(want[u] for u in keys[300:])  # the comparison covers false positives
+    assert verdicts(split) == want
+    split.compact()
+    assert len(split.table.lineage()) == 1
+    assert verdicts(split) == want
+    assert _bucket_bitmaps(split) == _bucket_bitmaps(union)
+
+
+def test_bloom_mark_appends_only_touched_chunks(spark, work_dir):
+    t = BloomTracker(SnapshotCatalog(spark, work_dir), capacity=200_000,
+                     error_rate=1e-7, n_buckets=8)
+    assert t.m_bucket // 8 > 20 * CHUNK_BYTES  # every bucket spans many chunks
+    t.visit(spark, URL)
+    assert 0 < t.table.read().count() <= t.k
+
+
+def test_bloom_missing_chunk_reads_unseen(spark, work_dir):
+    """A key whose chunks have no row, in a bucket that holds other chunks,
+    reads unseen without error."""
+    t = BloomTracker(SnapshotCatalog(spark, work_dir), capacity=200_000,
+                     error_rate=0.01, n_buckets=1)
+
+    def chunks(u):
+        h1, h2 = np.array([_hashes(u)], dtype=np.int64).T
+        byte_idx, _ = _bloom_positions(h1, h2, 1, t.m_bucket, t.k)
+        return {int(b) // CHUNK_BYTES for b in byte_idx[0]}
+
+    t.visit(spark, URL)
+    marked = chunks(URL)
+    assert {r["chunk"] for r in t.table.read().collect()} == marked
+    other = next(u for u in (f"http://x.example/{i}" for i in range(1000))
+                 if not chunks(u) & marked)
+    assert t.is_visited(spark, URL)
+    assert not t.is_visited(spark, other)

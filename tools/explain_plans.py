@@ -291,12 +291,15 @@ def main() -> None:
         "broadcast(8 queries), broadcast left-anti exclusion of the top-k "
         "positives, md5-rank window per query — no corpus-sized shuffle "
         "on the score path.",
-        "j1_bloom_probe": "J1 Bloom probe: JVM-side md5 hash seeds; each "
-        "key joins its bucket's newest bitmap (n_buckets rows, broadcast "
-        "by the planner) and its k bits are tested as Column expressions "
-        "(decimal position math, substr + getbit) — the keys are read "
-        "once, never shuffled, and no Python stage runs. The insert "
-        "(mark_seen) is the numpy cogroup that builds the bitmaps.",
+        "j1_bloom_probe": "J1 Bloom probe: JVM-side md5 hash seeds; the "
+        "chunk rows are OR'ed per (bucket, chunk) with bitmap_or_agg and "
+        "collected into one chunk map per bucket (n_buckets rows, "
+        "broadcast by the planner); each key's k bits are tested as "
+        "Column expressions (decimal position math, element_at on the "
+        "chunk, substr + getbit) — the keys are read once, never "
+        "shuffled, and no Python stage runs. The insert (mark_seen) "
+        "groups the same positions by (bucket, chunk) with "
+        "bitmap_construct_agg.",
     }
     # picks whose demonstrated property only shows with broadcast joins
     # off (at sf0.01 AQE would broadcast the small side and mask it)
